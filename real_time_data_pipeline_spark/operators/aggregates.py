@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import cache
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 
 
 def windowed_agg(
@@ -1588,8 +1589,8 @@ def qdigest_merge(
         )
         for m, o in zip(lm, lo)
     ]
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         out,
         "q_bp bigint, target_rank bigint, est_merged bigint, "
         "rank_err_merged bigint, within_merged boolean, "
@@ -1706,8 +1707,8 @@ def qdigest_quantiles(
                 len(digest),
             )
         )
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         rows,
         "q_bp bigint, est_cents bigint, target_rank bigint, "
         "rank_lo bigint, rank_hi bigint, rank_err bigint, "

@@ -15,6 +15,10 @@ bit-identical results (pinned by tests/test_r11_opt.py).
 Used by the PQ/IVF-PQ fit/encode/score passes and the sign-LSH bucket
 pass; per-task CPU, invisible at sf0.1 (2 000 vectors), the point at
 100 TB — evidence from the 30× probe lives in OPTIMIZATION_r11.md.
+
+:func:`local_frame` is the driver-side edge of the same boundary: the
+one way rows that start on the driver enter the engine (see the rule in
+``operators/cache.py``).
 """
 
 from __future__ import annotations
@@ -59,3 +63,29 @@ def list_array(matrix: np.ndarray, value_type: pa.DataType) -> pa.Array:
         np.ascontiguousarray(matrix).reshape(-1), type=value_type
     )
     return pa.ListArray.from_arrays(offsets, flat)
+
+
+def local_frame(spark, rows, schema):
+    """Frame over driver-side rows (tuples in ``schema`` order; a DDL
+    string or ``StructType``), shipped as one Arrow table.
+
+    ``createDataFrame(<list>)`` makes a Python-RDD scan whose actions
+    start a second Python worker pool (see ``operators/cache.py``); an
+    Arrow table becomes a ``LocalRelation`` that no Python worker
+    touches.  Values convert per column with the schema's Arrow types,
+    so the frame holds the same values ``createDataFrame`` would."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    struct = (
+        schema
+        if isinstance(schema, StructType)
+        else _parse_datatype_string(schema)
+    )
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -28,6 +28,22 @@ when done.  Two release modes:
   unpersist only drops cached blocks).  Single-threaded harnesses
   (bench.py, tools/parity.py) call it after every query; concurrent
   runners should use :func:`scoped` instead.
+
+:func:`checkpoint` is the same handle for engine-side state that must
+outlive its lineage — a stream fold's state between micro-batches.  It
+materializes the frame as an eager local checkpoint and registers it
+like a tracked persist; releasing it frees the checkpoint's blocks
+through :func:`release_local_checkpoint`, and :func:`release` frees one
+registered frame early (a fold drops the state it replaces).
+
+Rule: no engine path builds a frame from Python rows.  A frame built by
+``createDataFrame(<list of rows>)`` is a Python-RDD scan; its first
+action starts a second Python worker pool beside the SQL one (one
+``pyspark.daemon`` plus one worker per core) and every later action
+pays a Python round trip.  State that is already in the engine stays
+there (:func:`checkpoint`); rows that genuinely start on the driver
+enter as one Arrow table (``arrowvec.local_frame``), which the JVM
+holds as a ``LocalRelation``.
 """
 
 from __future__ import annotations
@@ -42,6 +58,28 @@ _TRACKED: list[DataFrame] = []
 _LOCAL = threading.local()
 
 
+def _register(df: DataFrame) -> DataFrame:
+    """Add a frame to the calling thread's innermost :func:`scoped`
+    list, or to the global list released by :func:`release_all`."""
+    stack = getattr(_LOCAL, "scopes", None)
+    if stack:
+        stack[-1].append(df)
+    else:
+        with _LOCK:
+            _TRACKED.append(df)
+    return df
+
+
+def _free(df: DataFrame) -> None:
+    """Drop whatever blocks hold a registered frame: its SQL cache entry
+    (tracked persists) or its local-checkpoint RDD (:func:`checkpoint`)."""
+    try:
+        df.unpersist()
+        release_local_checkpoint(df)
+    except Exception:  # session already stopped — nothing to free
+        pass
+
+
 def track(df: DataFrame, storage_level=None) -> DataFrame:
     """persist() the frame and register it for a later release.
 
@@ -53,19 +91,62 @@ def track(df: DataFrame, storage_level=None) -> DataFrame:
         df.persist(storage_level)
     else:
         df.persist()
-    stack = getattr(_LOCAL, "scopes", None)
-    if stack:
-        stack[-1].append(df)
-    else:
-        with _LOCK:
-            _TRACKED.append(df)
-    return df
+    return _register(df)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now as a local checkpoint and register the
+    result like :func:`track` does.
+
+    The returned frame reads the checkpoint's blocks: lineage is cut to
+    one scan, and no row crosses to the driver.  Once released (scope
+    exit, :func:`release_all` or :func:`release`) the blocks are gone
+    and the frame cannot be recomputed, so release only after its
+    consumer has been evaluated."""
+    return _register(df.localCheckpoint(eager=True))
+
+
+def release(df: DataFrame) -> bool:
+    """Free one registered frame now and forget it; returns False (and
+    frees nothing) for a frame that was never registered, such as a
+    lazy seed that a fold's first checkpoint replaces."""
+    stack = getattr(_LOCAL, "scopes", None) or []
+    with _LOCK:
+        owner = next(
+            (fr for fr in (*stack, _TRACKED) if any(f is df for f in fr)),
+            None,
+        )
+        if owner is None:
+            return False
+        owner[:] = [f for f in owner if f is not df]
+    _free(df)
+    return True
+
+
+def bind_scope(fn):
+    """Wrap ``fn`` so that, whichever thread calls it, frames it
+    registers land where they would have from the thread that binds it.
+
+    ``foreachBatch`` functions run on a callback thread, not on the
+    thread that started the stream; without this a fold's checkpoints
+    would escape the caller's :func:`scoped` context."""
+    stack = list(getattr(_LOCAL, "scopes", None) or [])
+
+    def bound(*args, **kwargs):
+        prev = getattr(_LOCAL, "scopes", None)
+        _LOCAL.scopes = stack
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            _LOCAL.scopes = prev
+
+    return bound
 
 
 @contextmanager
 def scoped():
     """Per-caller release scope: frames tracked by THIS thread while the
-    context is active are unpersisted on exit — isolation for concurrent
+    context is active are freed on exit — isolation for concurrent
     query runners that release_all() cannot give.  Scopes nest (inner
     scope captures, releases first).  Yields the scope's frame list so
     callers can assert on it in tests."""
@@ -79,26 +160,18 @@ def scoped():
     finally:
         stack.pop()
         for df in frames:
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
+            _free(df)
 
 
 def release_all() -> int:
-    """Unpersist every GLOBALLY tracked frame (see module docstring for
+    """Free every GLOBALLY registered frame (see module docstring for
     the multi-threaded caveat); returns how many were released.  Frames
     inside an active :func:`scoped` context are not touched."""
     with _LOCK:
         frames, _TRACKED[:] = list(_TRACKED), []
-    n = 0
     for df in frames:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
+        _free(df)
+    return len(frames)
 
 
 def n_tracked() -> int:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import cache
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 
 # ---------------------------------------------------------------- exact
 
@@ -1181,7 +1182,8 @@ def embedding_near_dup(
         F.collect_list(F.struct("id", "v")).alias("rows_b")
     )
     symmetric = probe_filter is None
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [
             (i, j)
             for i in range(n_blocks)

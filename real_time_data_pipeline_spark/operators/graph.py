@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import cache
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 
 # PageRank eager-checkpoint cadence (iterations per checkpoint).
 # Results are cadence-independent (integer fixpoint); see pagerank().
@@ -200,20 +201,10 @@ def connected_components(
                 # ~3x slower on a 32-partition edge set for zero memory
                 # benefit once the gate has passed.
                 pairs = [(r["u"], r["v"]) for r in e_plan.collect()]
-                labels = _union_find_components(pairs)
-                # Ship the labels back as a pandas frame: createDataFrame
-                # from local tuples evaluates through a Python-runner
-                # task on EVERY downstream action (~0.3 s each, 3.7 s on
-                # first touch), while the pandas input takes the Arrow
-                # fast path (~0.1 s) and the result plan is a pure
-                # LocalRelation.
-                import pandas as pd
-
-                pdf = pd.DataFrame(
-                    labels or None, columns=["node", "component"]
-                ).astype("int64")
-                return edges.sparkSession.createDataFrame(
-                    pdf, "node bigint, component bigint"
+                return local_frame(
+                    edges.sparkSession,
+                    _union_find_components(pairs),
+                    "node bigint, component bigint",
                 )
             e = chk(e_plan)
         finally:
@@ -448,7 +439,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # (bench/parity release_all after each query, same as the jaccard ops).
     spark = edges.sparkSession
     return stats.crossJoin(
-        spark.createDataFrame([(int(tri_n),)], "n_triangles bigint")
+        local_frame(spark, [(int(tri_n),)], "n_triangles bigint")
     ).select(
         "n_nodes",
         "n_edges",

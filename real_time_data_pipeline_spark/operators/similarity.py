@@ -397,15 +397,23 @@ def _ivf_centroid_matrix(corpus, n_cells, seed, id_col, vec_col):
     return Cm / np.linalg.norm(Cm, axis=1, keepdims=True)
 
 
-def _ivf_assign(corpus, Cm, id_col, vec_col):
+def _ivf_assign(corpus, Cm, id_col, vec_col, residual: bool = False):
     """One Arrow-batched pass assigning every vector to its nearest
     centroid.  Pass-through columns keep their input types (an
     array<double> corpus must not be truncated to float32 — scores are
-    documented bit-identical to the exact path)."""
+    documented bit-identical to the exact path).
+
+    ``residual=True`` emits (id, cell, residual) instead, the residual
+    being the unit vector minus its cell centroid — IVF-PQ's encode
+    input computed in the same pass, so no second Python worker runs
+    chained in the same task."""
     import numpy as np
     import pyarrow as pa
 
-    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
+    from real_time_data_pipeline_spark.operators.arrowvec import (
+        list_array,
+        list_matrix,
+    )
 
     # r11: mapInArrow + flat-buffer reshape (guide §4.2); the vector
     # column passes through untouched (same buffers), surviving rows via
@@ -426,16 +434,29 @@ def _ivf_assign(corpus, Cm, id_col, vec_col):
                 continue
             Vn = V / norms
             cell = np.argmax(Vn @ Cm.T, axis=1).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(0), rb.column(1), pa.array(cell)],
-                [id_col, vec_col, "cell"],
-            )
+            if residual:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        rb.column(0),
+                        pa.array(cell),
+                        list_array(Vn - Cm[cell], pa.float64()),
+                    ],
+                    [id_col, "cell", "residual"],
+                )
+            else:
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0), rb.column(1), pa.array(cell)],
+                    [id_col, vec_col, "cell"],
+                )
 
     cid_t = corpus.schema[id_col].dataType.simpleString()
     cvec_t = corpus.schema[vec_col].dataType.simpleString()
-    return corpus.select(id_col, vec_col).mapInArrow(
-        assign, f"{id_col} {cid_t}, {vec_col} {cvec_t}, cell int"
+    out = (
+        f"{id_col} {cid_t}, cell int, residual array<double>"
+        if residual
+        else f"{id_col} {cid_t}, {vec_col} {cvec_t}, cell int"
     )
+    return corpus.select(id_col, vec_col).mapInArrow(assign, out)
 
 
 def _probe_cells(queries, Cm, nprobe, query_id_col, query_vec_col):
@@ -463,14 +484,11 @@ def _ivf_probe_and_score(
 ):
     probe_q = _probe_cells(queries, Cm, nprobe, query_id_col, query_vec_col)
     qid_t = queries.schema[query_id_col].dataType.simpleString()
-    # pandas input for the (query, cell) probe list — same Python-runner
-    # avoidance as the centroid write in ivf_index_build.
-    import pandas as pd
+    from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 
-    probe_pdf = pd.DataFrame(probe_q, columns=[query_id_col, "cell"])
     probes = F.broadcast(
-        queries.sparkSession.createDataFrame(
-            probe_pdf, f"{query_id_col} {qid_t}, cell int"
+        local_frame(
+            queries.sparkSession, probe_q, f"{query_id_col} {qid_t}, cell int"
         ).join(
             queries.select(
                 query_id_col,
@@ -515,20 +533,12 @@ def ivf_index_build(
     no index structure beyond the directory tree."""
     Cm = _ivf_centroid_matrix(corpus, n_cells, seed, id_col, vec_col)
     spark = corpus.sparkSession
-    # pandas input, not a local tuple list: the tuple path evaluates
-    # through a Python-runner task per action (measured 4-8 s for this
-    # 16-row write — it dominated the index build), while the Arrow
-    # pandas path commits in ~0.2 s with bit-identical float64 values.
-    import pandas as pd
+    from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 
-    cent_pdf = pd.DataFrame(
-        {
-            "cell": pd.array(range(len(Cm)), dtype="int32"),
-            "centroid": [[float(x) for x in row] for row in Cm],
-        }
-    )
-    spark.createDataFrame(
-        cent_pdf, "cell int, centroid array<double>"
+    local_frame(
+        spark,
+        [(c, [float(x) for x in row]) for c, row in enumerate(Cm)],
+        "cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     # Repartition BY the partition column before partitionBy-write:
     # without it every write task emits a file per cell it sees (tasks ×
@@ -1091,77 +1101,78 @@ def pq_fit(
 
     # The Lloyd loop reads the SAME projection once per iteration; persist
     # it so iterations 2..n scan cached columnar batches instead of
-    # re-running the upstream plan (for ivfpq_build's residual codebooks
-    # that plan is itself two Arrow passes — assign + residual — per
-    # re-read).  Caching never changes values: same rows, same partitions,
-    # same per-batch partial sums (guide §5: persist reused iterative
-    # inputs).  r11 (ADVICE r10): pq_fit fully CONSUMES the projection
-    # before returning (its result is numpy codebooks, not a lazy frame),
-    # so the persist is released here instead of tracked for the caller —
-    # a long-lived session no longer accumulates one leaked cache per fit.
-    vecs = corpus.select(vec_col).persist()
+    # re-running the upstream plan.  Caching never changes values: same
+    # rows, same partitions, same per-batch partial sums (guide §5:
+    # persist reused iterative inputs).  pq_fit fully CONSUMES the
+    # projection before returning (its result is numpy codebooks, not a
+    # lazy frame), so the persist is released here — in a ``finally``, so
+    # a failed round does not leak it either — instead of tracked for the
+    # caller.
     from real_time_data_pipeline_spark.operators.arrowvec import (
         list_array,
         list_matrix,
     )
 
-    for _ in range(iters):
-        B = books  # rebind for closure capture per round
+    vecs = corpus.select(vec_col).persist()
+    try:
+        for _ in range(iters):
+            B = books  # rebind for closure capture per round
 
-        # r11: mapInArrow + flat-buffer reshape (guide §4.2) — one
-        # buffer view per batch instead of one numpy object per row;
-        # identical float64 values, identical partial sums.
-        def partials(batches):
-            import pyarrow as pa
+            # r11: mapInArrow + flat-buffer reshape (guide §4.2) — one
+            # buffer view per batch instead of one numpy object per row;
+            # identical float64 values, identical partial sums.
+            def partials(batches):
+                import pyarrow as pa
 
-            sums = np.zeros((m, k, dsub))
-            counts = np.zeros((m, k), dtype=np.int64)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                V = list_matrix(rb.column(0))
-                if normalize:
-                    V = V / np.linalg.norm(V, axis=1, keepdims=True)
-                for j in range(m):
-                    S = V[:, j * dsub : (j + 1) * dsub]
-                    # (batch, k) squared L2 to codebook j
-                    d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(-1)
-                    cell = d2.argmin(1)
-                    np.add.at(sums[j], cell, S)
-                    np.add.at(counts[j], cell, 1)
-            nz_j, nz_c = np.nonzero(counts)
-            if len(nz_j):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(nz_j.astype(np.int32)),
-                        pa.array(nz_c.astype(np.int32)),
-                        pa.array(counts[nz_j, nz_c].astype(np.int64)),
-                        list_array(sums[nz_j, nz_c], pa.float64()),
-                    ],
-                    ["sub", "cell", "n", "s"],
+                sums = np.zeros((m, k, dsub))
+                counts = np.zeros((m, k), dtype=np.int64)
+                for rb in batches:
+                    if rb.num_rows == 0:
+                        continue
+                    V = list_matrix(rb.column(0))
+                    if normalize:
+                        V = V / np.linalg.norm(V, axis=1, keepdims=True)
+                    for j in range(m):
+                        S = V[:, j * dsub : (j + 1) * dsub]
+                        # (batch, k) squared L2 to codebook j
+                        d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(-1)
+                        cell = d2.argmin(1)
+                        np.add.at(sums[j], cell, S)
+                        np.add.at(counts[j], cell, 1)
+                nz_j, nz_c = np.nonzero(counts)
+                if len(nz_j):
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(nz_j.astype(np.int32)),
+                            pa.array(nz_c.astype(np.int32)),
+                            pa.array(counts[nz_j, nz_c].astype(np.int64)),
+                            list_array(sums[nz_j, nz_c], pa.float64()),
+                        ],
+                        ["sub", "cell", "n", "s"],
+                    )
+
+            rows = (
+                vecs.mapInArrow(
+                    partials, "sub int, cell int, n long, s array<double>"
                 )
-
-        rows = (
-            vecs.mapInArrow(
-                partials, "sub int, cell int, n long, s array<double>"
-            )
-            .groupBy("sub", "cell")
-            .agg(
-                F.sum("n").alias("n"),
-                F.array(
-                    *[F.sum(F.col("s")[i]) for i in range(dsub)]
-                ).alias("s"),
-            )
-            .collect()
-        )
-        new = books.copy()
-        for r in rows:
-            if r["n"] > 0:
-                new[r["sub"], r["cell"]] = (
-                    np.array(r["s"]) / r["n"]
+                .groupBy("sub", "cell")
+                .agg(
+                    F.sum("n").alias("n"),
+                    F.array(
+                        *[F.sum(F.col("s")[i]) for i in range(dsub)]
+                    ).alias("s"),
                 )
-        books = new
-    vecs.unpersist()
+                .collect()
+            )
+            new = books.copy()
+            for r in rows:
+                if r["n"] > 0:
+                    new[r["sub"], r["cell"]] = (
+                        np.array(r["s"]) / r["n"]
+                    )
+            books = new
+    finally:
+        vecs.unpersist()
     return books
 
 
@@ -1179,12 +1190,20 @@ def pq_encode(
     reshape (operators/arrowvec) — the vector column converts to the
     (n, dim) matrix in one buffer view instead of one numpy object per
     row, and the codes come back as one flat buffer (guide §4.2); same
-    float64 bytes, bit-identical codes."""
+    float64 bytes, bit-identical codes.
+
+    The codes come back persisted and tracked (``cache.track``; the
+    caller releases them).  Every ADC scoring pass reads them through
+    that cached scan, which adaptive execution runs as its own stage: the
+    encode and scoring passes each hold one Python worker per task
+    instead of sharing a task with two (which doubled the worker pool),
+    and a codes frame scored more than once is encoded once."""
     from collections.abc import Iterator
 
     import numpy as np
     import pyarrow as pa
 
+    from real_time_data_pipeline_spark.operators import cache
     from real_time_data_pipeline_spark.operators.arrowvec import (
         list_array,
         list_matrix,
@@ -1217,10 +1236,12 @@ def pq_encode(
     extra_schema = "".join(
         f", {c} {corpus.schema[c].dataType.simpleString()}" for c in extra
     )
-    return corpus.select(id_col, *extra, vec_col).mapInArrow(
-        encode,
-        f"id {corpus.schema[id_col].dataType.simpleString()}"
-        f"{extra_schema}, codes array<int>",
+    return cache.track(
+        corpus.select(id_col, *extra, vec_col).mapInArrow(
+            encode,
+            f"id {corpus.schema[id_col].dataType.simpleString()}"
+            f"{extra_schema}, codes array<int>",
+        )
     )
 
 
@@ -1543,12 +1564,15 @@ def pq_topk_rerank_multi(
     Output matches the per-leg union shape: (query_id, rank,
     neighbor_id, cos_bp); the probe row itself is excluded per leg.
     """
+    from real_time_data_pipeline_spark.operators.arrowvec import local_frame
+
     spark = corpus.sparkSession
     cands = pq_topk_multi(codes_df, books, probes, k=shortlist).select(
         "query_id", F.col("id").alias(id_col)
     )
     qdf = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(qid), [float(x) for x in vec]) for qid, vec in probes],
             "query_id bigint, _qv array<double>",
         )
@@ -1603,49 +1627,20 @@ def ivfpq_build(
     and comparable across cells (Jégou et al. 2011 §IV).
 
     Returns (coarse_centroids (n_cells × dim), codebooks (m, k, dim/m),
-    codes_df (id, cell, codes)).  Build cost: one assign pass, one
-    residual projection pass, the pq_fit rounds on residuals, one
-    encode pass — all Arrow-batched, state bounded by
-    n_cells·dim + m·k·dim/m floats.
+    codes_df (id, cell, codes)).  Build cost: one assign-and-residual
+    pass, the pq_fit rounds on residuals, one encode pass — all
+    Arrow-batched, state bounded by n_cells·dim + m·k·dim/m floats.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    from real_time_data_pipeline_spark.operators.arrowvec import (
-        list_array,
-        list_matrix,
-    )
-
-    Cm = _ivf_centroid_matrix(corpus, n_cells, seed, id_col, vec_col)
-    assigned = _ivf_assign(corpus.select(id_col, vec_col), Cm, id_col, vec_col)
-
-    id_t = corpus.schema[id_col].dataType.simpleString()
-
-    # r11: mapInArrow + flat-buffer reshape on both edges (guide §4.2);
-    # same float64 normalization/subtraction, bit-identical residuals.
-    # _ivf_assign emits (id, vec, cell) — consumed positionally.
-    def residual(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            V = list_matrix(rb.column(1))
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            cells = rb.column(2).to_numpy()
-            R = V - Cm[cells]
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(0), rb.column(2), list_array(R, pa.float64())],
-                [id_col, "cell", "residual"],
-            )
-
     from real_time_data_pipeline_spark.operators import cache
 
+    Cm = _ivf_centroid_matrix(corpus, n_cells, seed, id_col, vec_col)
     # The residual frame feeds every pq_fit Lloyd round AND the encode
-    # pass; uncached, each consumer re-ran the assign + residual Arrow
-    # passes from the parquet scan (guide §5: persist reused iterative
-    # inputs — released by the caller's cache.release_all()).
+    # pass; uncached, each consumer re-ran the assign pass from the
+    # parquet scan (guide §5: persist reused iterative inputs — released
+    # by the caller's cache.release_all()).
     residuals = cache.track(
-        assigned.mapInArrow(
-            residual, f"{id_col} {id_t}, cell int, residual array<double>"
+        _ivf_assign(
+            corpus.select(id_col, vec_col), Cm, id_col, vec_col, residual=True
         )
     )
     # pq_fit/encode L2-normalize their input; residuals are NOT unit
@@ -1785,21 +1780,17 @@ def semdedup_cells(
         .limit(k_cells)
         .collect()  # k rows — bounded by design
     )
-    spark = corpus.sparkSession
-    # pandas input, not a local tuple list — the Arrow path (see the
-    # ivf_index_build centroid write note: the tuple path pays a
-    # multi-second Python-runner evaluation even for k rows).
-    import pandas as pd
+    from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 
-    seed_pdf = pd.DataFrame(
-        {
-            "cell": pd.array(range(len(seeds)), dtype="int32"),
-            "seed": [[float(x) for x in r["vec"]] for r in seeds],
-            "snrm": [float(r["nrm"]) for r in seeds],
-        }
-    )
     seed_df = F.broadcast(
-        spark.createDataFrame(seed_pdf, "cell int, seed array<double>, snrm double")
+        local_frame(
+            corpus.sparkSession,
+            [
+                (c, [float(x) for x in r["vec"]], float(r["nrm"]))
+                for c, r in enumerate(seeds)
+            ],
+            "cell int, seed array<double>, snrm double",
+        )
     )
     scored = (
         base.filter(F.col("nrm") > 0)

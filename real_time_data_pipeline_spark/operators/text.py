@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import cache
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 from real_time_data_pipeline_spark.operators.dedup import tokens_col
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic
@@ -723,8 +724,10 @@ def learn_bpe_merges(
         # local checkpoint; without this they linger until RDD GC).
         cache.release_local_checkpoint(word_counts)
         merges = _bpe_merges_local(local, n_merges)
-        return spark.createDataFrame(
-            merges, "merge_rank int, left string, right string, pair_count long"
+        return local_frame(
+            spark,
+            merges,
+            "merge_rank int, left string, right string, pair_count long",
         )
 
     words = (
@@ -802,8 +805,10 @@ def learn_bpe_merges(
     # The merge table is already on the driver; the last round's blocks
     # are dead too.
     cache.release_local_checkpoint(words)
-    return spark.createDataFrame(
-        merges, "merge_rank int, left string, right string, pair_count long"
+    return local_frame(
+        spark,
+        merges,
+        "merge_rank int, left string, right string, pair_count long",
     )
 
 
@@ -1067,9 +1072,7 @@ def search_index_query(
     lowered = [t.lower() for t in terms]
     buckets = [
         r["b"]
-        for r in spark.createDataFrame(
-            [(t,) for t in lowered], "term string"
-        )
+        for r in local_frame(spark, [(t,) for t in lowered], "term string")
         .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
         .distinct()
         .collect()

@@ -2164,9 +2164,10 @@ def q_stream_cdc_apply(spark, sf_dir):
     the held state (merge_snapshot_state).  Associativity of the
     weighted max_by/sum partials means ANY batch split yields the
     identical final snapshot — the property the oracle hash pins.
-    State is one row per key between batches (the production shape
-    upserts into the warehouse table; collecting it here is the bounded
-    test-harness capture, |users| rows)."""
+    State is one row per key between batches (|users| rows), held as an
+    engine-side checkpoint (reference_parity.swap_state); the seed
+    stays lazy and is computed inside the first batch's checkpoint."""
+    from real_time_data_pipeline_spark.operators import cache
     from real_time_data_pipeline_spark.operators.cdc import (
         latest_state,
         merge_snapshot_state,
@@ -2175,6 +2176,7 @@ def q_stream_cdc_apply(spark, sf_dir):
         _stream_events,
         await_streaming,
         stream_state_scope,
+        swap_state,
     )
 
     cutoff = F.lit(_CDC_CUTOFF).cast("timestamp")
@@ -2183,23 +2185,23 @@ def q_stream_cdc_apply(spark, sf_dir):
         ["user_id"],
         ["ts", "event_id"],
     )
-    holder = {"state": spark.createDataFrame(seed.collect(), seed.schema)}
+    holder = {"state": seed}
 
     def fold(batch, _i):
         inc_log = _with_op(batch.filter(F.col("ts") >= cutoff))
         inc = latest_state(inc_log, ["user_id"], ["ts", "event_id"])
-        merged = merge_snapshot_state(
-            holder["state"], inc, ["user_id"], ["ts", "event_id"]
-        )
-        holder["state"] = batch.sparkSession.createDataFrame(
-            merged.collect(), merged.schema
+        swap_state(
+            holder,
+            merge_snapshot_state(
+                holder["state"], inc, ["user_id"], ["ts", "event_id"]
+            ),
         )
 
     with stream_state_scope(spark):
         q = (
             _stream_events(spark, sf_dir)
             .select("user_id", "event_id", "ts", "event_type", "value")
-            .writeStream.foreachBatch(fold)
+            .writeStream.foreachBatch(cache.bind_scope(fold))
             .trigger(availableNow=True)
             .start()
         )

@@ -566,8 +566,9 @@ def q_stream_ohlc(spark, sf_dir):
     of min/max/min_by/max_by partials means any batch split yields the
     identical final bars, which is exactly what sharing the batch
     ``ohlc_bars`` oracle pins.  State is one row per bar between batches
-    (|types × days| — bounded; production upserts the same summaries
-    into the warehouse bar table)."""
+    (|types × days| — bounded), held as an engine-side checkpoint
+    (reference_parity.swap_state)."""
+    from real_time_data_pipeline_spark.operators import cache
     from real_time_data_pipeline_spark.operators.aggregates import (
         merge_ohlc_state,
         ohlc_state,
@@ -576,6 +577,7 @@ def q_stream_ohlc(spark, sf_dir):
         _stream_events,
         await_streaming,
         stream_state_scope,
+        swap_state,
     )
 
     # Seed with an EMPTY summary of the right schema so a stream that
@@ -596,7 +598,7 @@ def q_stream_ohlc(spark, sf_dir):
         "event_id",
         "value_c",
     )
-    holder = {"state": spark.createDataFrame([], empty.schema)}
+    holder = {"state": empty}
 
     def fold(batch, _i):
         ev = batch.filter(F.col("value").isNotNull()).select(
@@ -609,16 +611,15 @@ def q_stream_ohlc(spark, sf_dir):
         inc = ohlc_state(
             ev, ["event_type", "day"], "ts", "event_id", "value_c"
         )
-        merged = merge_ohlc_state(holder["state"], inc, ["event_type", "day"])
-        holder["state"] = batch.sparkSession.createDataFrame(
-            merged.collect(), merged.schema
+        swap_state(
+            holder, merge_ohlc_state(holder["state"], inc, ["event_type", "day"])
         )
 
     with stream_state_scope(spark):
         q = (
             _stream_events(spark, sf_dir)
             .select("event_type", "ts", "event_id", "value")
-            .writeStream.foreachBatch(fold)
+            .writeStream.foreachBatch(cache.bind_scope(fold))
             .trigger(availableNow=True)
             .start()
         )
@@ -1909,11 +1910,14 @@ def q_stream_join_view_incremental(spark, sf_dir):
     associative COUNT/SUM merge — any batch split yields the identical
     final view, which is exactly what sharing the full-recompute hash
     pins.  State between batches is one row per (segment, year) —
-    bounded; production upserts the same partials into the warehouse
-    view table instead of holding them on the driver."""
+    bounded — held as an engine-side checkpoint
+    (reference_parity.swap_state); the seed stays lazy and is computed
+    inside the first batch's checkpoint."""
+    from real_time_data_pipeline_spark.operators import cache
     from real_time_data_pipeline_spark.queries.reference_parity import (
         await_streaming,
         stream_state_scope,
+        swap_state,
     )
 
     cust = load_table(spark, sf_dir, "customer").select(
@@ -1936,23 +1940,20 @@ def q_stream_join_view_incremental(spark, sf_dir):
 
     cutoff = F.lit("1997-01-01").cast("date")
     orders = load_table(spark, sf_dir, "orders")
-    seed = partials(orders.filter(F.col("o_orderdate") < cutoff))
-    holder = {"state": spark.createDataFrame(seed.collect(), seed.schema)}
+    holder = {"state": partials(orders.filter(F.col("o_orderdate") < cutoff))}
 
     def fold(batch, _i):
         inc = batch.filter(F.col("o_orderdate") >= cutoff)
         delta = partials(inc)
-        merged = (
+        swap_state(
+            holder,
             holder["state"]
             .unionByName(delta)
             .groupBy("c_mktsegment", "order_year")
             .agg(
                 F.sum("n_orders").alias("n_orders"),
                 F.sum("rev_c").alias("rev_c"),
-            )
-        )
-        holder["state"] = spark.createDataFrame(
-            merged.collect(), merged.schema
+            ),
         )
 
     schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
@@ -1960,7 +1961,7 @@ def q_stream_join_view_incremental(spark, sf_dir):
         q = (
             spark.readStream.schema(schema)
             .parquet(f"{sf_dir}/orders*.parquet")
-            .writeStream.foreachBatch(fold)
+            .writeStream.foreachBatch(cache.bind_scope(fold))
             .trigger(availableNow=True)
             .start()
         )

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 from real_time_data_pipeline_spark.operators.statistics import (
     co_occurrence_lift,
     gini_simpson,
@@ -697,9 +698,7 @@ def q_stream_clamped_balance(spark, sf_dir):
             .start()
         )
         await_streaming(q, "stream_clamped_balance")
-    return spark.createDataFrame(
-        list(holder.values()), CLAMPED_BALANCE_OUTPUT
-    )
+    return local_frame(spark, list(holder.values()), CLAMPED_BALANCE_OUTPUT)
 
 
 QUERIES = {

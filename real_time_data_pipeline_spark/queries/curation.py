@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import curation
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 from real_time_data_pipeline_spark.queries.dedup import DUCK_TOKENS
 from real_time_data_pipeline_spark.queries.text import _stop_list
 from real_time_data_pipeline_spark.schemas import load_table
@@ -470,8 +471,8 @@ def q_stream_curation_flags(spark, sf_dir):
     pair; this entry puts the full readStream→foreachBatch cycle under
     the driver gate)."""
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        _capture_stage,
         await_streaming,
+        capture_stage,
         stream_state_scope,
     )
     from real_time_data_pipeline_spark.streaming.pipeline import (
@@ -489,7 +490,7 @@ def q_stream_curation_flags(spark, sf_dir):
     # r11: the sink appends each batch's verdicts to a parquet capture
     # dir instead of collecting rows through the driver (guide §5; same
     # rows, JVM-side — see reference_parity.stream_capture).
-    stage = _capture_stage("stream_curation_flags")
+    stage = capture_stage(spark, "stream_curation_flags")
 
     def sink(flags, _batch_id):
         flags.write.mode("append").parquet(stage)
@@ -689,12 +690,14 @@ def q_stream_calibration_drift(spark, sf_dir):
         (w, d, n, nm, nh, na)
         for (w, d), (n, nm, nh, na) in partials.items()
     ]
-    per = spark.createDataFrame(
+    per = local_frame(
+        spark,
         rows,
         "window_id bigint, decile bigint, n_docs bigint, "
         "n_model_keep bigint, n_heuristic_keep bigint, n_agree bigint",
     )
-    ref_df = spark.createDataFrame(
+    ref_df = local_frame(
+        spark,
         [(d, bp) for d, bp in ref_rows.items()],
         "decile bigint, ref_model_keep_bp bigint",
     )

@@ -225,11 +225,11 @@ def q_stream_dedup_incremental(spark, sf_dir):
     dedup.build_minhash_index(corpus, path, num_perm=128, bands=32)
     # Schema of the probe output, resolved lazily (no action) from a
     # zero-row probe so the streaming capture frame matches exactly.
-    out_schema = dedup.incremental_minhash_pairs(
-        spark, docs.limit(0), corpus, path,
-        num_perm=128, bands=32, verify_threshold=0.8,
-    ).schema
-    cache.release_all()
+    with cache.scoped():
+        out_schema = dedup.incremental_minhash_pairs(
+            spark, docs.limit(0), corpus, path,
+            num_perm=128, bands=32, verify_threshold=0.8,
+        ).schema
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
@@ -238,8 +238,8 @@ def q_stream_dedup_incremental(spark, sf_dir):
         .filter(F.col("doc_id") % 10 == 0)
     )
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        _capture_stage,
         await_streaming,
+        capture_stage,
         stream_state_scope,
     )
 
@@ -247,17 +247,18 @@ def q_stream_dedup_incremental(spark, sf_dir):
     # instead of collecting rows through the driver (see
     # reference_parity.stream_capture; inlined here because the probe
     # must release its tracked per-batch persist after each write).
-    stage = _capture_stage("stream_dedup_incremental")
+    stage = capture_stage(spark, "stream_dedup_incremental")
 
     def probe(batch, _i):
-        out = dedup.incremental_minhash_pairs(
-            spark, batch, corpus, path,
-            num_perm=128, bands=32, verify_threshold=0.8,
-        )
-        out.write.mode("append").parquet(stage)
-        # the probe tracks a per-batch persist; free it before the next
-        # micro-batch so a long-running stream holds no stale cache
-        cache.release_all()
+        # the probe tracks a per-batch persist; its scope frees it before
+        # the next micro-batch so a long-running stream holds no stale
+        # cache, and leaves frames this query did not create alone
+        with cache.scoped():
+            out = dedup.incremental_minhash_pairs(
+                spark, batch, corpus, path,
+                num_perm=128, bands=32, verify_threshold=0.8,
+            )
+            out.write.mode("append").parquet(stage)
 
     with stream_state_scope(spark):
         q = (

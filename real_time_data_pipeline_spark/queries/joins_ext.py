@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from real_time_data_pipeline_spark.operators import cache
 from real_time_data_pipeline_spark.operators.joins import asof_join
 from real_time_data_pipeline_spark.schemas import load_table
 
@@ -307,8 +308,9 @@ def q_bucketed_revenue_join(spark, sf_dir):
         )
         # materialize the plan while broadcast is still disabled (the
         # config is read at planning time; restoring it after return
-        # would re-plan with a broadcast join)
-        out = out.localCheckpoint()
+        # would re-plan with a broadcast join); registered, so the
+        # caller's release frees the checkpoint blocks
+        out = cache.checkpoint(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     return out

@@ -19,7 +19,7 @@ from real_time_data_pipeline_spark.functions.stable import (
     cents_sql,
     sum_money_sql,
 )
-from real_time_data_pipeline_spark.operators import aggregates
+from real_time_data_pipeline_spark.operators import aggregates, cache
 from real_time_data_pipeline_spark.schemas import load_table
 
 EVENT_TYPES = ["click", "purchase", "error", "signup", "view"]
@@ -259,10 +259,10 @@ def q_stream_rollup_incremental(spark, sf_dir):
     pre-cutoff rollup is the seeded state, post-cutoff events ARRIVE AS
     A STREAM, and every micro-batch folds into the state via
     merge_monthly_rollup (associative partials, so any batch split
-    yields the identical final table).  State is materialized at
-    ROLLUP grain between batches (|months × keys| rows — bounded;
-    the production shape upserts the same partials into the warehouse
-    table instead of holding them on the driver)."""
+    yields the identical final table).  State is checkpointed in the
+    engine at ROLLUP grain between batches (|months × keys| rows —
+    bounded; see :func:`swap_state`), so no row reaches the driver and
+    each batch's plan is one fold deep."""
     from real_time_data_pipeline_spark.operators.aggregates import (
         merge_monthly_rollup,
         monthly_rollup,
@@ -281,20 +281,18 @@ def q_stream_rollup_incremental(spark, sf_dir):
         inc = batch.filter(F.col("ts") >= cutoff).select(
             "user_id", "ts", F.expr(cents_sql("value")).alias("cents")
         )
-        merged = merge_monthly_rollup(
-            holder["state"], inc, "ts", "user_id", "cents"
-        )
-        # materialize between batches: bounds plan depth AND models the
-        # warehouse-table handoff a production maintainer performs
-        holder["state"] = spark.createDataFrame(
-            merged.collect(), merged.schema
+        swap_state(
+            holder,
+            merge_monthly_rollup(
+                holder["state"], inc, "ts", "user_id", "cents"
+            ),
         )
 
     with stream_state_scope(spark):
         q = (
             _stream_events(spark, sf_dir)
             .select("user_id", "ts", "value")
-            .writeStream.foreachBatch(fold)
+            .writeStream.foreachBatch(cache.bind_scope(fold))
             .trigger(availableNow=True)
             .start()
         )
@@ -951,23 +949,51 @@ def await_streaming(q, name: str, timeout_s: int = 300) -> None:
         )
 
 
-def _capture_stage(name: str) -> str:
+def swap_state(holder: dict, merged: DataFrame) -> None:
+    """One ``foreachBatch`` fold step: ``holder["state"]`` becomes
+    ``merged`` checkpointed in the engine (``cache.checkpoint``), and
+    the state it replaces is freed.  State stays in the block store —
+    nothing is collected to the driver or rebuilt from Python rows —
+    and every batch's plan starts from one checkpoint scan, so lineage
+    never grows with the batch count.  The final state stays registered
+    until the caller's release (``cache.release_all`` / ``scoped``);
+    wrap the fold in ``cache.bind_scope`` so a caller's scope sees it."""
+    old = holder["state"]
+    holder["state"] = cache.checkpoint(merged)
+    cache.release(old)
+
+
+_CAPTURE_APPS: set[str] = set()
+
+
+def capture_stage(spark, name: str) -> str:
     """Fresh parquet capture dir for one stream run, under the repo's
     spark-warehouse (same location as the existing staged stream
-    inputs).  The dir is DELETED and recreated on every call, so every
+    inputs): ``_stream_cap/<applicationId>/<name>_<run token>``.  No two
+    runs share a dir — concurrent runs of one stream, in one
+    application or several, never clobber each other's rows — and every
     bench/oracle invocation recomputes the capture from the parquet
-    inputs inside the timed region — nothing survives across runs."""
+    inputs inside the timed region.  The captured frame reads the dir
+    lazily, so the dir outlives the run; the application's capture dirs
+    are removed when the Python driver exits."""
+    import atexit
     import shutil
+    import uuid
 
-    d = os.path.join(
+    app = spark.sparkContext.applicationId
+    root = os.path.join(
         os.path.dirname(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         ),
         "spark-warehouse",
-        f"_stream_cap_{name}",
+        "_stream_cap",
+        app,
     )
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
+    if app not in _CAPTURE_APPS:
+        _CAPTURE_APPS.add(app)
+        atexit.register(shutil.rmtree, root, True)
+    d = os.path.join(root, f"{name}_{uuid.uuid4().hex[:12]}")
+    os.makedirs(d)
     return d
 
 
@@ -1005,7 +1031,7 @@ def stream_capture(
     :func:`stream_state_scope` (Python-stateful folds size to cores).
     """
     spark = sdf.sparkSession
-    stage = _capture_stage(name)
+    stage = capture_stage(spark, name)
     wmode = "overwrite" if output_mode == "complete" else "append"
 
     def _sink(batch, _i):

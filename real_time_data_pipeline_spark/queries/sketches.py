@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import aggregates as A
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 from real_time_data_pipeline_spark.queries.dedup import duck_hexfold_n
 from real_time_data_pipeline_spark.schemas import load_table
 
@@ -213,7 +214,8 @@ def q_stream_kmv_fold(spark, sf_dir):
             else ((A.KMV_K - 1) * A.KMV_SPACE) // hs[-1]
         )
         rows.append((g, len(hs), hs[-1], est))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "event_type string, n_kept bigint, kth_hash bigint, est_kmv bigint",
     )
@@ -681,7 +683,8 @@ def q_stream_qdigest_fold(spark, sf_dir):
             (q_bp, est, target, r_lo, r_hi, rank_err, err_limit,
              rank_err <= err_limit, len(digest))
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "q_bp bigint, est_cents bigint, target_rank bigint, "
         "rank_lo bigint, rank_hi bigint, rank_err bigint, "

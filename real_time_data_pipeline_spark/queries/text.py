@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 from real_time_data_pipeline_spark.operators import text as T
 from real_time_data_pipeline_spark.queries.dedup import (
     DUCK_TOKENS,
@@ -447,8 +448,6 @@ def q_stream_heavy_hitters(spark, sf_dir):
     import math
     import os
 
-    import pandas as pd
-
     from real_time_data_pipeline_spark.operators.aggregates import (
         mg_merge_counts,
         mg_summary,
@@ -492,9 +491,7 @@ def q_stream_heavy_hitters(spark, sf_dir):
         await_streaming(q, "stream_heavy_hitters")
 
     n_total = state["n_total"]
-    cand = spark.createDataFrame(
-        pd.DataFrame({"item": list(state["counts"])}), "item string"
-    )
+    cand = local_frame(spark, [(t,) for t in state["counts"]], "item string")
     toks_static = _docs(spark, sf_dir).select(
         F.explode(tokens_col("text")).alias("item")
     )
@@ -899,8 +896,8 @@ def q_hybrid_rrf(spark, sf_dir):
         "doc_id", F.col("rnk").alias("rank_lex")
     )
     emb = T.hash_embed(docs, portable=True).select("doc_id", "embedding")
-    qdf = spark.createDataFrame(
-        [(-1, " ".join(BM25_QUERY_TERMS))], "doc_id long, text string"
+    qdf = local_frame(
+        spark, [(-1, " ".join(BM25_QUERY_TERMS))], "doc_id long, text string"
     )
     qvec = T.hash_embed(qdf, portable=True).select(
         F.col("doc_id").alias("query_id"),

@@ -24,6 +24,8 @@ import json
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
+
 METRICS_SCHEMA = (
     "query_id string, query_name string, batch_id long, ts string, "
     "num_input_rows long, input_rows_per_second double, "
@@ -86,7 +88,7 @@ class MetricsRecorder(StreamingQueryListener):
         if not self._buf:
             return
         rows, self._buf = self._buf, []
-        self._spark.createDataFrame(rows, METRICS_SCHEMA).coalesce(1).write.mode(
+        local_frame(self._spark, rows, METRICS_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self._path)
 

@@ -136,3 +136,99 @@ def test_release_local_checkpoint_frees_blocks_and_noops_elsewhere(spark):
     # non-checkpoint plan: no-op, returns False
     assert not cache.release_local_checkpoint(spark.range(5))
     assert _n_cached(spark) == base
+
+
+def _rdd_blocks(spark) -> set[int]:
+    """Ids of RDDs that hold blocks in the block store."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_checkpoint_registers_and_release_frees_one_frame(spark):
+    base = _rdd_blocks(spark)
+    a = cache.checkpoint(spark.range(10))
+    b = cache.checkpoint(spark.range(20))
+    assert cache.n_tracked() == 2
+    assert len(_rdd_blocks(spark) - base) == 2
+    assert cache.release(a)
+    assert not cache.release(a)  # already gone
+    assert not cache.release(spark.range(3))  # never registered
+    assert cache.n_tracked() == 1 and b.count() == 20
+    cache.release_all()
+    assert _rdd_blocks(spark) <= base
+
+
+_FOLDS = [
+    "stream_rollup_incremental",
+    "stream_cdc_apply",
+    "stream_ohlc",
+    "stream_join_view_incremental",
+]
+
+
+@pytest.mark.parametrize("qname", _FOLDS)
+def test_stream_fold_state_is_engine_side_and_released(spark, qname):
+    """The driver-state folds keep their state as registered engine-side
+    checkpoints: the result is readable after the stream, and
+    release_all() leaves no tracked frame and no block behind."""
+    import __spark_entry__ as entrymod
+
+    base = _rdd_blocks(spark)
+    df = entrymod.queries()[qname](spark, SF)
+    assert df.count() > 0
+    assert cache.n_tracked() >= 1
+    cache.release_all()
+    assert cache.n_tracked() == 0
+    assert _rdd_blocks(spark) <= base
+
+
+def test_stream_fold_raising_mid_stream_leaks_nothing(spark, monkeypatch):
+    """A fold that fails after checkpointing its state surfaces the
+    error, and the state it had registered is still freed by
+    release_all()."""
+    import __spark_entry__ as entrymod
+    from real_time_data_pipeline_spark.queries import reference_parity
+
+    real = reference_parity.swap_state
+
+    def swap_then_fail(holder, merged):
+        real(holder, merged)
+        raise RuntimeError("fold failed mid-stream")
+
+    monkeypatch.setattr(reference_parity, "swap_state", swap_then_fail)
+    base = _rdd_blocks(spark)
+    with pytest.raises(Exception, match="fold failed mid-stream"):
+        entrymod.queries()["stream_cdc_apply"](spark, SF)
+    assert cache.n_tracked() == 1
+    cache.release_all()
+    assert cache.n_tracked() == 0
+    assert _rdd_blocks(spark) <= base
+
+
+def test_swap_state_frees_the_state_it_replaces(spark):
+    from real_time_data_pipeline_spark.queries.reference_parity import (
+        swap_state,
+    )
+
+    base = _rdd_blocks(spark)
+    holder = {"state": spark.range(5)}  # lazy seed: nothing to free
+    for i in range(3):
+        swap_state(holder, holder["state"].union(spark.range(i, i + 1)))
+        assert cache.n_tracked() == 1
+        assert len(_rdd_blocks(spark) - base) == 1
+    assert holder["state"].count() == 8
+    cache.release_all()
+    assert _rdd_blocks(spark) <= base
+
+
+def test_fold_state_lands_in_the_callers_scope(spark):
+    """foreachBatch runs the fold on another thread; bind_scope still
+    files its checkpoints under the scope that started the stream."""
+    import __spark_entry__ as entrymod
+
+    base = _rdd_blocks(spark)
+    with cache.scoped() as frames:
+        df = entrymod.queries()["stream_ohlc"](spark, SF)
+        assert df.count() > 0
+        assert len(frames) == 1
+        assert cache.n_tracked() == 0
+    assert _rdd_blocks(spark) <= base

@@ -182,6 +182,7 @@ SEMANTICALLY_BOUNDED = {
 _ARROW_PY_PREFIXES = (
     "ArrowEvalPython",
     "MapInPandas",
+    "MapInArrow",
     "FlatMapGroupsInPandas",
     "FlatMapGroupsInPandasWithState",
 )
@@ -211,9 +212,67 @@ ARROW_PYTHON_ALLOWED = {
     # sign-LSH projections: numpy matmul against the broadcast
     # hyperplane matrix (operators/dedup.embedding_near_dup_lsh)
     "dedup_embedding_lsh", "dedup_embedding_lsh_pruned",
+    # the same sign-LSH bucket pass inside the full dedup pipeline's
+    # embedding leg (caught once MapInArrow joined the Python prefixes)
+    "dedup_pipeline_lsh", "dedup_pipeline_lsh_pruned",
     # BPE trainer's distributed pair-count fallback path
     "bpe_vocab",
 }
+
+
+def _is_python(name: str) -> bool:
+    return (
+        name.startswith("BatchEvalPython")
+        or name.startswith(_ARROW_PY_PREFIXES)
+        or "InPandas" in name
+    )
+
+
+# Nodes below which a Python pass runs in another stage (its own tasks,
+# so its own Python worker): shuffle and broadcast exchanges, and cached
+# scans, which adaptive execution materializes as their own stage.
+_STAGE_BOUNDARY_PREFIXES = (
+    "Exchange",
+    "ShuffleExchange",
+    "BroadcastExchange",
+    "ReusedExchange",
+    "ShuffleQueryStage",
+    "BroadcastQueryStage",
+    "TableCacheQueryStage",
+    "InMemoryTableScan",
+)
+
+
+def _python_per_task(node, crowded: list[str]) -> int:
+    """Python workers one task of ``node``'s stage holds at once: its own
+    Python node plus those below it up to the next stage boundary
+    (summed over zipped children, max over a Union's alternatives).
+    Every node where that exceeds one is appended to ``crowded``; cached
+    plans are checked as stages of their own."""
+    node = _unwrap_adaptive(node)
+    name = node.nodeName()
+    below = []
+    for child in _children(node):
+        child = _unwrap_adaptive(child)
+        n = _python_per_task(child, crowded)
+        cname = child.nodeName()
+        if cname.startswith("InMemoryTableScan"):
+            _python_per_task(child.relation().cachedPlan(), crowded)
+        below.append(0 if cname.startswith(_STAGE_BOUNDARY_PREFIXES) else n)
+    if name.startswith("Union"):
+        n = max(below, default=0)
+    else:
+        n = sum(below)
+    n += _is_python(name)
+    if n > 1:
+        crowded.append(name)
+    return n
+
+
+def _python_chains(df) -> list[str]:
+    crowded: list[str] = []
+    _python_per_task(df._jdf.queryExecution().executedPlan(), crowded)
+    return crowded
 
 
 def _python_eval_nodes(df) -> tuple[list[str], list[str]]:
@@ -224,7 +283,7 @@ def _python_eval_nodes(df) -> tuple[list[str], list[str]]:
         name = node.nodeName()
         if name.startswith("BatchEvalPython"):
             row_wise.append(name)
-        elif name.startswith(_ARROW_PY_PREFIXES) or "InPandas" in name:
+        elif _is_python(name):
             arrow.append(name)
     return row_wise, arrow
 
@@ -299,6 +358,7 @@ def registry_plan_scan(spark, sf_dir):
             "bnl": _bnl_violations(df),
             "py_row": row_wise,
             "py_arrow": arrow,
+            "py_chain": _python_chains(df),
             "fat": _fat_scans(df),
             "module": name2mod.get(name, "?"),
         }
@@ -367,6 +427,69 @@ def test_no_python_row_udf_and_arrow_only_where_reviewed(
         f"{unreviewed} — if a JVM builtin genuinely can't express it, "
         "add the query to ARROW_PYTHON_ALLOWED with a reason"
     )
+
+
+# Queries allowed to run two Python passes in one task.  Each such task
+# holds two Python workers, so the session's worker pool grows past one
+# worker per core; adding a query here is a reviewed act with a reason.
+PYTHON_CHAIN_ALLOWED = {
+    "mm_image_downsample": "downsample re-encodes the bytes that decode "
+    "parses next; a stage boundary between the two codec passes would "
+    "persist the re-encoded image column only to read it straight back",
+}
+# The multimodal tier synthesizes its media with a mapInPandas pass
+# (attach_fake_image / attach_fake_audio) that stands in for a media
+# file scan, so every codec pass chains onto it (mm_image_downsample
+# above as well).  Real media arrive through a scan with no Python
+# node; persisting the synthetic blobs to split the chain would pin
+# every image/audio byte for an unmeasured gain (no benchmark workload
+# runs these queries).
+PYTHON_CHAIN_ALLOWED.update(
+    dict.fromkeys(
+        (
+            "mm_frame_sample",
+            "mm_image_decode",
+            "mm_audio_stats",
+            "mm_audio_segments",
+            "mm_image_tiles",
+            "mm_phash_near_dup",
+            "mm_keyframes",
+        ),
+        "media synthesis pass chained onto its codec pass",
+    )
+)
+
+
+def test_one_python_worker_per_task(registry_plan_scan):
+    """No stage may chain two Python passes with no exchange or cached
+    scan between them: each task would hold two Python workers and the
+    worker pool would double (the pq_encode → ADC-scoring chain did)."""
+    crowded = {
+        n: r["py_chain"]
+        for n, r in registry_plan_scan.items()
+        if r["py_chain"] and n not in PYTHON_CHAIN_ALLOWED
+    }
+    assert not crowded, (
+        f"two Python passes share a task in: {crowded} — fuse them into "
+        "one kernel, put a tracked persist between them, or add a "
+        "reviewed PYTHON_CHAIN_ALLOWED entry with a reason"
+    )
+
+
+def test_python_chain_guard_catches_a_real_chain(spark):
+    """The per-task walk must flag two chained Arrow passes and clear
+    them once a cached scan separates them — otherwise a walker
+    regression would disarm the guard."""
+    from real_time_data_pipeline_spark.operators import cache
+
+    def ident(batches):
+        yield from batches
+
+    one = spark.range(100).mapInArrow(ident, "id long")
+    assert _python_chains(one) == []
+    assert _python_chains(one.mapInArrow(ident, "id long"))
+    assert _python_chains(cache.track(one).mapInArrow(ident, "id long")) == []
+    cache.release_all()
 
 
 def test_flagship_plan_has_no_unbounded_bnl(spark):

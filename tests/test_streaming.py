@@ -854,3 +854,60 @@ def test_clamped_balance_stateful_folds_in_order(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="out-of-order"):
         list(stateful._clamped_balance_fn((1,), [stale], _FakeState()))
+
+
+def test_same_name_stream_captures_run_concurrently(spark, tmp_path):
+    """Two runs of one capture name at the same time each get their own
+    stage dir (application id + run token), so neither deletes or reads
+    the other's rows.  Each run uses its own session so the two
+    state-partition overrides do not interleave on one conf."""
+    import threading
+
+    from real_time_data_pipeline_spark.queries import reference_parity as rp
+
+    runs = {}
+    for k in (1, 2):
+        d = tmp_path / f"in{k}"
+        spark.range(k * 1000, k * 1000 + 200 * k).write.parquet(str(d))
+        runs[k] = str(d)
+    app_dir = os.path.join(
+        os.path.dirname(
+            os.path.dirname(os.path.dirname(os.path.abspath(rp.__file__)))
+        ),
+        "spark-warehouse",
+        "_stream_cap",
+        spark.sparkContext.applicationId,
+    )
+
+    def stages():
+        if not os.path.isdir(app_dir):
+            return set()
+        return {
+            f for f in os.listdir(app_dir)
+            if f.startswith("same_name_capture_")
+        }
+
+    before = stages()
+    start = threading.Barrier(2)
+    got, errors = {}, []
+
+    def run(k):
+        try:
+            s = spark.newSession()
+            sdf = s.readStream.schema("id long").parquet(runs[k])
+            start.wait(timeout=60)
+            out = rp.stream_capture(sdf, "same_name_capture")
+            got[k] = sorted(r.id for r in out.collect())
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(k,)) for k in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    for k in (1, 2):
+        assert got[k] == list(range(k * 1000, k * 1000 + 200 * k))
+    assert len(stages() - before) == 2

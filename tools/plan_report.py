@@ -29,7 +29,7 @@ def plan_features(plan: str) -> dict:
         "broadcast_joins": len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)),
         "smj": len(re.findall(r"\(\d+\) SortMergeJoin", plan)),
         "bnl": len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)),
-        "python": len(re.findall(r"(?:ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|BatchEvalPython)", plan)),
+        "python": len(re.findall(r"(?:ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|BatchEvalPython)", plan)),
         "scans": re.findall(r"ReadSchema: struct<([^>]*)>", plan),
         "pushed": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
         "cached": len(re.findall(r"\(\d+\) InMemoryTableScan", plan)),
