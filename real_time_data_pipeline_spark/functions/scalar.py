@@ -9,21 +9,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-ISO_FORMAT = "yyyy-MM-dd'T'HH:mm:ss"
-
-
-def iso_parse(col: str | Column) -> Column:
-    """F1/F7: ISO-8601 string (incl. 'Z' suffix) → timestamp.  Spark's
-    to_timestamp parses ISO-8601 natively (reference
-    src/models/transaction.py:81-85 does .replace('Z','+00:00'))."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.to_timestamp(F.regexp_replace(c, "Z$", "+00:00"))
-
-
-def iso_format(col: str | Column) -> Column:
-    """F7: timestamp → ISO-8601 string (reference transaction.py:51,60)."""
-    return F.date_format(col, ISO_FORMAT)
-
 
 def record_hash(cols: list[str]) -> Column:
     """F6: SHA-256 record hash for lineage (reference
@@ -32,24 +17,6 @@ def record_hash(cols: list[str]) -> Column:
     way sort_keys does."""
     ordered = sorted(cols)
     return F.sha2(F.to_json(F.struct(*[F.col(c) for c in ordered])), 256)
-
-
-def concat_hash(cols: list[str], sep: str = "|") -> Column:
-    """Oracle-friendly variant of F6: sha256 over a '|'-joined cast of the
-    columns (expressible identically in DuckDB: sha256(concat_ws(...)));
-    nulls encode as empty string per concat_ws semantics."""
-    return F.sha2(F.concat_ws(sep, *[F.col(c).cast("string") for c in sorted(cols)]), 256)
-
-
-def gen_uuid() -> Column:
-    """F8: uuid() — non-deterministic; keep out of oracle queries."""
-    return F.expr("uuid()")
-
-
-def title_case(col: str | Column) -> Column:
-    """F9: Python str.title() equivalent (reference
-    transaction_producer.py:123 builds '{Type} transaction')."""
-    return F.initcap(col)
 
 
 def partition_cols(ts_col: str) -> list[Column]:

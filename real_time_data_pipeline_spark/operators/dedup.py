@@ -33,7 +33,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import cache
-from real_time_data_pipeline_spark.operators.arrowvec import local_frame
+from real_time_data_pipeline_spark.operators.arrowvec import (
+    list_matrix,
+    local_frame,
+    map_in_arrow,
+)
 
 # ---------------------------------------------------------------- exact
 
@@ -850,33 +854,15 @@ def lsh_candidate_pairs(
     )  # (n_tables*n_planes, dim)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-    # r11: mapInArrow + flat-buffer reshape (operators/arrowvec, guide
-    # §4.2) — one buffer view per batch instead of one numpy object per
-    # row; identical float64 matmul and sign, bit-identical buckets.
     def assign(batches):
-        import pyarrow as pa
-
-        from real_time_data_pipeline_spark.operators.arrowvec import (
-            list_matrix,
-        )
-
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            V = list_matrix(rb.column(1))
-            S = (V @ P.T) >= 0  # (n, n_tables*n_planes)
-            cols = [rb.column(0)]
-            for t in range(n_tables):
-                cols.append(
-                    pa.array(
-                        (
-                            S[:, t * n_planes : (t + 1) * n_planes] @ weights
-                        ).astype(np.int32)
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                cols, ["id"] + [f"b{t}" for t in range(n_tables)]
-            )
+            S = (list_matrix(rb.column(1)) @ P.T) >= 0  # (n, tables*planes)
+            yield [rb.column(0)] + [
+                S[:, t * n_planes : (t + 1) * n_planes] @ weights
+                for t in range(n_tables)
+            ]
 
     id_t = df.schema[id_col].dataType.simpleString()
     bucket_schema = "id " + id_t + ", " + ", ".join(
@@ -895,7 +881,7 @@ def lsh_candidate_pairs(
     # subtree once per side (2 Python passes over the full vector
     # column instead of 1 — visible as duplicated MapInPandas nodes in
     # plans/r11/dedup_pipeline_lsh_before.txt).
-    bucketed = cache.track(src.mapInArrow(assign, bucket_schema))
+    bucketed = cache.track(map_in_arrow(src, assign, bucket_schema))
     keyed = bucketed.select(
         "id",
         F.explode(
@@ -994,7 +980,7 @@ def embedding_near_dup_lsh(
     recall-subset of the exact operator (property-tested).
 
     Bucket bits for ALL tables come from one numpy matmul inside a
-    single mapInPandas pass (V·Pᵀ ≥ 0, bits packed per table).  The
+    single typed mapInArrow pass (V·Pᵀ ≥ 0, bits packed per table).  The
     round-1 JVM variant built n_tables × n_planes interpreted HOF dot
     products with 64-literal plane arrays per bit — ~10M interpreted ops
     at sf0.1 and an expression tree large enough to swing
@@ -1087,8 +1073,9 @@ def embedding_near_dup(
        packed one-block-per-row (collect_list of (id, vec) structs);
     2. a LITERAL block-pair grid (B(B+1)/2 rows — a LocalTableScan, so
        the plan stays equi-join-only, no BroadcastNestedLoopJoin)
-       equi-joins the packed blocks into cells; one Arrow-batched numpy
-       GEMM per cell emits candidate pairs at gemm_cos >= t − 1e-6;
+       equi-joins the packed blocks into cells; one typed mapInArrow
+       pass runs one numpy GEMM per cell and emits candidate pairs at
+       gemm_cos >= t − 1e-6;
     3. candidates (near-dup-bounded, tiny) join their vectors back and
        the emitted cos_bp comes from the SAME sequential double fold as
        before — bit-identical output to the naive plan.
@@ -1161,10 +1148,7 @@ def embedding_near_dup(
             .select("id_a", "id_b", "cos_bp")
         )
 
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     spark = df.sparkSession
     # zero/NaN-norm vectors have no defined cosine to anything (NULL
@@ -1195,39 +1179,48 @@ def embedding_near_dup(
     id_t = df.schema[id_col].dataType.simpleString()
     cut = t_bp / 1e4 - 1e-6
 
-    def prefilter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                ids_a = np.array([r["id"] for r in row["rows_a"]])
-                A = np.array(
-                    [np.asarray(r["v"], dtype=np.float64) for r in row["rows_a"]]
-                )
-                An = A / np.linalg.norm(A, axis=1, keepdims=True)
-                same = symmetric and row["blk_a"] == row["blk_b"]
-                if same:
-                    ids_b, Bn = ids_a, An
-                else:
-                    ids_b = np.array([r["id"] for r in row["rows_b"]])
-                    Bm = np.array(
-                        [np.asarray(r["v"], dtype=np.float64) for r in row["rows_b"]]
-                    )
-                    Bn = Bm / np.linalg.norm(Bm, axis=1, keepdims=True)
-                S = An @ Bn.T
-                ii, jj = np.nonzero(S >= cut)
-                ia, ib = ids_a[ii], ids_b[jj]
-                if not symmetric or same:
+    def unpack(col):
+        """(ids, unit vectors, row offsets) of a packed
+        ``array<struct<id, v>>`` column: every cell's rows in one flat
+        conversion, cell i at rows [offsets[i], offsets[i + 1])."""
+        ids, vecs = col.values.flatten()  # struct fields (id, v)
+        V = list_matrix(vecs)
+        ids = ids.to_numpy(zero_copy_only=False)
+        offsets = col.offsets.to_numpy(zero_copy_only=False)
+        return ids, V / np.linalg.norm(V, axis=1, keepdims=True), offsets
+
+    def prefilter(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            ids_a, An, off_a = unpack(rb.column("rows_a"))
+            ids_b, Bn, off_b = unpack(rb.column("rows_b"))
+            blk_a = rb.column("blk_a").to_numpy(zero_copy_only=False)
+            blk_b = rb.column("blk_b").to_numpy(zero_copy_only=False)
+            out_a, out_b = [], []
+            for i in range(rb.num_rows):
+                sa = slice(off_a[i], off_a[i + 1])
+                sb = slice(off_b[i], off_b[i + 1])
+                ii, jj = np.nonzero(An[sa] @ Bn[sb].T >= cut)
+                ia, ib = ids_a[sa][ii], ids_b[sb][jj]
+                if not symmetric or blk_a[i] == blk_b[i]:
                     # a-side is the probe (or the diagonal's dedupe):
                     # keep the original id_a < id_b orientation
                     m = ia < ib
-                    out_a, out_b = ia[m], ib[m]
+                    out_a.append(ia[m])
+                    out_b.append(ib[m])
                 else:
                     # off-diagonal symmetric cell: every cross pair
                     # appears exactly once — canonicalize to (min, max)
-                    out_a = np.minimum(ia, ib)
-                    out_b = np.maximum(ia, ib)
-                yield pd.DataFrame({"id_a": out_a, "id_b": out_b})
+                    out_a.append(np.minimum(ia, ib))
+                    out_b.append(np.maximum(ia, ib))
+            yield [np.concatenate(out_a), np.concatenate(out_b)]
 
-    cand = cells.mapInPandas(prefilter, f"id_a {id_t}, id_b {id_t}")
+    cand = map_in_arrow(
+        cells.select("blk_a", "blk_b", "rows_a", "rows_b"),
+        prefilter,
+        f"id_a {id_t}, id_b {id_t}",
+    )
     va = nz.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("nrm_a")
     )

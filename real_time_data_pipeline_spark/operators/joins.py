@@ -5,15 +5,13 @@ Reference parity:
      the streaming join is an explicit TODO at
      src/spark/transaction_processor.py:267 ("In a real application, you'd
      join with account and customer data here").
-  J2 customer enrichment — declared kafka_config.yml:19 / spark_config.yml:61.
-  J3 reference_id self-link — schema-level relationship,
-     src/models/transaction.py:26.
+  J2 customer enrichment and J3 reference_id self-link are served by the
+     registry queries ``enrich_join`` / ``self_join``
+     (queries/reference_parity.py).
 
-Scale notes: dimension tables (accounts/customers) are bounded and small
-relative to the fact stream, so J1/J2 are explicit ``broadcast()`` hash
-joins — no shuffle of the fact side, and the same plan works stream-static.
-J3 is a shuffle equi-join; at 100 TB both sides hash-partition on the join
-key and AQE handles skew.
+Scale notes: the accounts dimension is bounded and small relative to the
+fact stream, so J1 is an explicit ``broadcast()`` hash join — no shuffle of
+the fact side, and the same plan works stream-static.
 """
 
 from __future__ import annotations
@@ -39,11 +37,6 @@ def enrich_with_accounts(txns: DataFrame, accounts: DataFrame) -> DataFrame:
     return out.withColumn(
         "customer_id", F.coalesce(F.col("customer_id"), F.col("_acc_customer_id"))
     ).drop("_acc_customer_id")
-
-
-def enrich_with_customers(txns: DataFrame, customers: DataFrame) -> DataFrame:
-    """J2: left broadcast join on customer_id."""
-    return txns.join(F.broadcast(customers), "customer_id", "left")
 
 
 def stream_stream_time_join(
@@ -79,20 +72,6 @@ def stream_stream_time_join(
         & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {within}"))
     )
     return lw.join(rw, cond, how).drop(rkey)
-
-
-def link_references(txns: DataFrame) -> DataFrame:
-    """J3: self-join linking each transaction to the one its reference_id
-    points at (t1.reference_id == t2.transaction_id)."""
-    left = txns.alias("t1")
-    right = txns.select(
-        F.col("transaction_id").alias("ref_transaction_id"),
-        F.col("transaction_type").alias("ref_transaction_type"),
-        F.col("amount").alias("ref_amount"),
-    ).alias("t2")
-    return left.join(
-        right, F.col("t1.reference_id") == F.col("t2.ref_transaction_id"), "inner"
-    )
 
 
 def salted_join(

@@ -23,8 +23,15 @@ prefix, trading recall for a ~2^bits candidate reduction.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from real_time_data_pipeline_spark.operators.arrowvec import (
+    list_matrix,
+    local_frame,
+    map_in_arrow,
+)
 
 
 def _dot(a, b) -> F.Column:
@@ -88,6 +95,27 @@ def cosine_topk(
     )
 
 
+# numpy GEMM vs the sequential fold differ by a few ulps on unit-vector
+# cosines (|err| <= dim·2^-53 ≈ 1e-14 at dim 64); the GEMM selection
+# keeps every candidate within this margin of the k-th score.
+_GEMM_TIE_EPS = 1e-9
+
+
+def _tie_closed_top(d, k: int, eps: float = 0.0, valid=None):
+    """Indices of the k smallest entries of ``d`` (among ``valid`` rows)
+    plus every entry within ``eps`` of the k-th — all of them when fewer
+    than k.  A local top-k prune must be closed under the global tie
+    order: breaking a tie by position in the batch (an argsort cut)
+    can drop the row the global (score, id) order ranks in, while
+    keeping every tie lets the global selection decide."""
+    idx = np.arange(len(d)) if valid is None else np.nonzero(valid)[0]
+    if len(idx) <= k:
+        return idx
+    dv = d[idx]
+    kth = np.partition(dv, k - 1)[k - 1]
+    return idx[dv <= kth + eps]
+
+
 def cosine_topk_gemm(
     corpus: DataFrame,
     queries: DataFrame,
@@ -96,32 +124,27 @@ def cosine_topk_gemm(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    exact_rerank: bool = False,
-    rerank_margin: int = 8,
 ) -> DataFrame:
     """Exact top-k via blocked matrix multiply — the vectorized scale
     path.  The probe set is collected driver-side (it is a bounded query
     batch — the one place a collect is correct by design) and closed over;
-    each corpus partition streams through ``mapInPandas`` doing one numpy
-    GEMM per Arrow batch and emitting only its local top-k per query, so
-    the shuffle to the final ranking carries ≤ k·|queries| rows per
-    partition regardless of corpus size.
+    each corpus partition streams through one typed ``mapInArrow`` pass
+    doing one numpy GEMM per Arrow batch and emitting only its local
+    candidates per query, so the shuffle to the final ranking carries
+    about k·|queries| rows per batch regardless of corpus size.
 
-    Numerically: numpy pairwise summation ≠ the sequential fold of
-    :func:`cosine_topk`, so raw GEMM scores can differ in the last ulp —
-    ranks are identical except for exact ties at the boundary.  With
-    ``exact_rerank=True`` the GEMM pass only SELECTS candidates (top
-    ``k + rerank_margin`` per query, so a last-ulp flip at the k-boundary
-    cannot change the final set) and the emitted ``cos_bp``/``rank`` are
-    recomputed on that k·|queries|-bounded set with the same sequential
-    double fold as :func:`cosine_topk` — bit-identical output to the
-    brute-force path at a candidate-bounded cost, which is what lets the
-    GEMM variant share the exact path's value-hash oracle.  Without the
-    flag the raw GEMM scores are emitted (rows-only registration; the
-    unit test pins neighbor-set equality vs the exact path).
+    The GEMM only SELECTS candidates; the emitted ``cos_bp``/``rank``
+    are recomputed on the candidate set with the same sequential double
+    fold as :func:`cosine_topk` — bit-identical output to the brute-force
+    path at a candidate-bounded cost, which is what lets this share the
+    exact path's value-hash oracle.  numpy's blocked summation differs
+    from that fold in the last ulps (and by a row's position in its
+    batch), so both the per-batch and the global selection are closed
+    under near-ties: every candidate within ``_GEMM_TIE_EPS`` of the
+    k-th GEMM score survives.  A row of the exact top-k can then never
+    be pruned: k rows beating it by more than 2·ulp-error in GEMM space
+    beat it in the exact fold too.
     """
-    import numpy as np
-
     qrows = queries.select(query_id_col, query_vec_col).collect()
     # zero-norm queries have no defined cosine to anything — excluded,
     # matching cosine_topk (see its docstring)
@@ -138,16 +161,7 @@ def cosine_topk_gemm(
     cid_t = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"{query_id_col} {qid_t}, neighbor_id {cid_t}, cos double"
 
-    # r11: mapInArrow + flat-buffer reshape (guide §4.2) — same
-    # argpartition over the same float64 GEMM scores, bit-identical
-    # candidate rows.
     def score(batches):
-        import pyarrow as pa
-
-        from real_time_data_pipeline_spark.operators.arrowvec import (
-            list_matrix,
-        )
-
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -162,49 +176,40 @@ def cosine_topk_gemm(
                 C, ids, norms = C[keep], ids[keep], norms[keep]
             if not len(ids):
                 continue
-            Cn = C / norms
-            S = Cn @ Qn.T  # (batch, n_queries)
-            take = min(sel + 1, len(ids))  # +1 in case self is in the batch
+            S = (C / norms) @ Qn.T  # (batch, n_queries)
             out_q, out_rows, out_c = [], [], []
             for j, qid in enumerate(qids):
-                idx = np.argpartition(-S[:, j], take - 1)[:take]
-                m = ids[idx] != qid
-                idx = idx[m]
-                out_q.extend([qid] * len(idx))
+                idx = _tie_closed_top(-S[:, j], k, _GEMM_TIE_EPS, ids != qid)
+                out_q.append(np.full(len(idx), qid))
                 out_rows.append(idx)
                 out_c.append(S[idx, j])
             allidx = np.concatenate(out_rows)
-            if not len(allidx):
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_q),
-                    pa.array(ids[allidx]),
-                    pa.array(np.concatenate(out_c), type=pa.float64()),
-                ],
-                [query_id_col, "neighbor_id", "cos"],
-            )
+            if len(allidx):
+                yield [
+                    np.concatenate(out_q),
+                    ids[allidx],
+                    np.concatenate(out_c),
+                ]
 
-    sel = k + rerank_margin if exact_rerank else k
-    local = corpus.select(id_col, vec_col).mapInArrow(score, out_schema)
+    local = map_in_arrow(corpus.select(id_col, vec_col), score, out_schema)
+    # Global tie-closed selection over the bounded candidate union: the
+    # k-th best GEMM score per query, then every candidate within eps.
     w = Window.partitionBy(query_id_col).orderBy(
         F.desc("cos"), F.asc("neighbor_id")
     )
-    ranked = local.withColumn("rank", F.row_number().over(w))
-    if not exact_rerank:
-        return ranked.filter(F.col("rank") <= k).select(
-            query_id_col,
-            "rank",
-            "neighbor_id",
-            F.floor(F.lit(1e4) * F.col("cos")).cast("bigint").alias("cos_bp"),
-        )
-    # Candidate-bounded exact re-rank: k+margin survivors per query join
-    # their vectors back (broadcast query side; the candidate side is
-    # k·|queries| rows) and the emitted score/rank come from the same
-    # sequential fold as cosine_topk — bit-identical to brute force.
-    cand = ranked.filter(F.col("rank") <= sel).select(
-        query_id_col, "neighbor_id"
+    kth = F.min(F.when(F.col("_rk") <= k, F.col("cos"))).over(
+        Window.partitionBy(query_id_col)
     )
+    cand = (
+        local.withColumn("_rk", F.row_number().over(w))
+        .withColumn("_kth", kth)
+        .filter(F.col("cos") >= F.col("_kth") - F.lit(_GEMM_TIE_EPS))
+        .select(query_id_col, "neighbor_id")
+    )
+    # Candidate-bounded exact re-rank: the survivors join their vectors
+    # back (broadcast query side; the candidate side is ~k·|queries|
+    # rows) and the emitted score/rank come from the same sequential
+    # fold as cosine_topk — bit-identical to brute force.
     cvec = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     )
@@ -214,14 +219,11 @@ def cosine_topk_gemm(
     exact_cos = _dot(F.col("_cv"), F.col("_qv")) / (
         _norm(F.col("_cv")) * _norm(F.col("_qv"))
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
     return (
         cand.join(cvec, "neighbor_id")
         .join(F.broadcast(qvec), query_id_col)
         .withColumn("cos", exact_cos)
-        .withColumn("rank", F.row_number().over(w2))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             query_id_col,
@@ -360,8 +362,8 @@ def ivf_topk(
     corpus vectors with the smallest xxhash64(id, seed) (TakeOrdered —
     one pass, no shuffle of vector payloads; a k-means refinement would
     drop in here without changing the plan shape).  Every corpus vector
-    is assigned to its nearest centroid by cosine in one Arrow-batched
-    ``mapInPandas`` pass (numpy argmax against the 16×dim centroid
+    is assigned to its nearest centroid by cosine in one typed
+    ``mapInArrow`` pass (numpy argmax against the 16×dim centroid
     matrix); at 100 TB the (id → cell) assignment is the partition key
     you'd persist the corpus under, so a probe reads nprobe/n_cells of
     the data.  Each query probes its `nprobe` nearest cells; candidates
@@ -382,8 +384,6 @@ def ivf_topk(
 def _ivf_centroid_matrix(corpus, n_cells, seed, id_col, vec_col):
     """Deterministic coarse centroids: corpus vectors with the smallest
     xxhash64(id, seed), L2-normalized, as an (n_cells × dim) matrix."""
-    import numpy as np
-
     cent_rows = (
         corpus.select(id_col, vec_col)
         # a zero-norm vector cannot serve as a centroid (its normalized
@@ -398,7 +398,7 @@ def _ivf_centroid_matrix(corpus, n_cells, seed, id_col, vec_col):
 
 
 def _ivf_assign(corpus, Cm, id_col, vec_col, residual: bool = False):
-    """One Arrow-batched pass assigning every vector to its nearest
+    """One typed ``mapInArrow`` pass assigning every vector to its nearest
     centroid.  Pass-through columns keep their input types (an
     array<double> corpus must not be truncated to float32 — scores are
     documented bit-identical to the exact path).
@@ -407,17 +407,10 @@ def _ivf_assign(corpus, Cm, id_col, vec_col, residual: bool = False):
     being the unit vector minus its cell centroid — IVF-PQ's encode
     input computed in the same pass, so no second Python worker runs
     chained in the same task."""
-    import numpy as np
-    import pyarrow as pa
 
-    from real_time_data_pipeline_spark.operators.arrowvec import (
-        list_array,
-        list_matrix,
-    )
-
-    # r11: mapInArrow + flat-buffer reshape (guide §4.2); the vector
-    # column passes through untouched (same buffers), surviving rows via
-    # one take() — same float64 math, bit-identical cells.
+    # The vector column passes through untouched (same buffers),
+    # surviving rows via one take() — same float64 math, bit-identical
+    # cells.
     def assign(batches):
         for rb in batches:
             if rb.num_rows == 0:
@@ -428,26 +421,16 @@ def _ivf_assign(corpus, Cm, id_col, vec_col, residual: bool = False):
             # excluded from the index, matching cosine_topk's rule
             keep = norms[:, 0] > 0
             if not keep.all():
-                rb = rb.take(pa.array(np.nonzero(keep)[0]))
+                rb = rb.take(np.nonzero(keep)[0])
                 V, norms = V[keep], norms[keep]
             if rb.num_rows == 0:
                 continue
             Vn = V / norms
-            cell = np.argmax(Vn @ Cm.T, axis=1).astype(np.int32)
+            cell = np.argmax(Vn @ Cm.T, axis=1)
             if residual:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(0),
-                        pa.array(cell),
-                        list_array(Vn - Cm[cell], pa.float64()),
-                    ],
-                    [id_col, "cell", "residual"],
-                )
+                yield [rb.column(0), cell, Vn - Cm[cell]]
             else:
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(0), rb.column(1), pa.array(cell)],
-                    [id_col, vec_col, "cell"],
-                )
+                yield [rb.column(0), rb.column(1), cell]
 
     cid_t = corpus.schema[id_col].dataType.simpleString()
     cvec_t = corpus.schema[vec_col].dataType.simpleString()
@@ -456,14 +439,12 @@ def _ivf_assign(corpus, Cm, id_col, vec_col, residual: bool = False):
         if residual
         else f"{id_col} {cid_t}, {vec_col} {cvec_t}, cell int"
     )
-    return corpus.select(id_col, vec_col).mapInArrow(assign, out)
+    return map_in_arrow(corpus.select(id_col, vec_col), assign, out)
 
 
 def _probe_cells(queries, Cm, nprobe, query_id_col, query_vec_col):
     """Driver-side probe list: (query_id, cell) for each query's nprobe
     nearest centroids.  The query batch is small by contract."""
-    import numpy as np
-
     n_cells = len(Cm)
     qrows = queries.select(query_id_col, query_vec_col).collect()
     probe_q = []
@@ -484,8 +465,6 @@ def _ivf_probe_and_score(
 ):
     probe_q = _probe_cells(queries, Cm, nprobe, query_id_col, query_vec_col)
     qid_t = queries.schema[query_id_col].dataType.simpleString()
-    from real_time_data_pipeline_spark.operators.arrowvec import local_frame
-
     probes = F.broadcast(
         local_frame(
             queries.sparkSession, probe_q, f"{query_id_col} {qid_t}, cell int"
@@ -533,8 +512,6 @@ def ivf_index_build(
     no index structure beyond the directory tree."""
     Cm = _ivf_centroid_matrix(corpus, n_cells, seed, id_col, vec_col)
     spark = corpus.sparkSession
-    from real_time_data_pipeline_spark.operators.arrowvec import local_frame
-
     local_frame(
         spark,
         [(c, [float(x) for x in row]) for c, row in enumerate(Cm)],
@@ -582,8 +559,6 @@ def ivf_index_append(
     the next free id (max existing + 1, from partition metadata only)
     is used; the base build owns ``batch=-1``.  Don't mix the two
     modes on one index within a fold sequence."""
-    import numpy as np
-
     spark = new_vectors.sparkSession
     cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
     Cm = np.array([np.asarray(r.centroid, dtype=np.float64) for r in cent])
@@ -619,8 +594,6 @@ def ivf_index_topk(
     directories are scanned (verified by plan/inputFiles in tests);
     scoring is identical to :func:`ivf_topk`, so results match the
     in-memory operator exactly for the same corpus and parameters."""
-    import numpy as np
-
     cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
     Cm = np.array([np.asarray(r.centroid, dtype=np.float64) for r in cent])
 
@@ -658,8 +631,6 @@ def kmeans_fit(
     (standard Lloyd's degeneracy rule) so k never silently shrinks.
     Returns ``(centroid_matrix, assignments)`` with assignments from the
     FINAL centroids."""
-    import numpy as np
-
     Cm = _ivf_centroid_matrix(corpus, k, seed, id_col, vec_col)
     vecs = corpus.select(id_col, vec_col)
     for _ in range(iters):
@@ -690,26 +661,19 @@ def kmeans_fit(
 def kmeans_inertia(assigned: DataFrame, Cm, vec_col: str = "embedding"):
     """Mean cosine distance (1 - cos) of each vector to its assigned
     centroid — the spherical-k-means objective, computed in one
-    Arrow-batched pass + a scalar aggregate."""
-    from collections.abc import Iterator
+    typed ``mapInArrow`` pass + a scalar aggregate."""
 
-    import numpy as np
-    import pandas as pd
-
-    C = Cm
-
-    def dist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def dist(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = list_matrix(rb.column(0))
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            cos = np.einsum("ij,ij->i", Vn, C[pdf["cell"].to_numpy()])
-            yield pd.DataFrame({"d": 1.0 - cos})
+            cell = rb.column(1).to_numpy(zero_copy_only=False)
+            yield [1.0 - np.einsum("ij,ij->i", Vn, Cm[cell])]
 
     return (
-        assigned.select(vec_col, "cell")
-        .mapInPandas(dist, "d double")
+        map_in_arrow(assigned.select(vec_col, "cell"), dist, "d double")
         .agg(F.avg("d").alias("inertia"))
         .collect()[0]["inertia"]
     )
@@ -817,11 +781,11 @@ def pca_fit(
     variance; the whitening/reduction step run before ANN indexing or
     cluster analysis of a 100 TB embedding corpus.
 
-    Scale shape: one ``mapInPandas`` pass emits per-Arrow-batch Gram
+    Scale shape: one typed ``mapInArrow`` pass emits per-partition Gram
     partials (count, Σx, X'X flattened) — executor state is dim² floats,
-    never rows; the partials (≤ batches rows of dim²+dim+1 doubles) are
-    summed by ONE tiny aggregate and the dim×dim eigendecomposition runs
-    on the driver (dim is bounded — 64 here; the method is for
+    never rows; the partials (≤ partitions rows of dim²+dim+1 doubles)
+    are summed by ONE tiny aggregate and the dim×dim eigendecomposition
+    runs on the driver (dim is bounded — 64 here; the method is for
     tall-skinny matrices, dim ≲ 10³).  No row leaves the executors.
 
     Eigenvector sign is fixed by convention (largest-|component| entry
@@ -830,32 +794,23 @@ def pca_fit(
     bounded partials (order-independent to the last ulp only — fine for
     the rows-only tier this feeds).
     """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     dim = len(df.select(vec_col).first()[0])
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches):
         # ONE partial per partition (accumulate across Arrow batches) —
         # the downstream reduce sees #partitions rows, not #batches.
         n_tot = 0
         s_tot = np.zeros(dim)
         g_tot = np.zeros((dim, dim))
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            X = list_matrix(rb.column(0))
             n_tot += len(X)
             s_tot += X.sum(axis=0)
             g_tot += X.T @ X
         if n_tot:
-            yield pd.DataFrame(
-                {"p": [np.concatenate(([n_tot], s_tot, g_tot.ravel())).tolist()]}
-            )
+            yield [np.concatenate(([n_tot], s_tot, g_tot.ravel()))[None, :]]
 
     # Elementwise reduce via posexplode + (index)-keyed sum: 1+dim+dim²
     # grouped sums of #partitions values each.  The flat-expression
@@ -863,8 +818,7 @@ def pca_fit(
     # compiles 4k+ aggregate expressions and stalls janino for tens of
     # seconds at dim=64; this shape is O(1) plan size at any dim.
     rows = (
-        df.select(vec_col)
-        .mapInPandas(partials, "p array<double>")
+        map_in_arrow(df.select(vec_col), partials, "p array<double>")
         .select(F.posexplode("p").alias("i", "v"))
         .groupBy("i")
         .agg(F.sum("v").alias("v"))
@@ -898,41 +852,28 @@ def pca_transform(
     vec_col: str = "embedding",
     prefix: str = "pc",
 ) -> DataFrame:
-    """Project rows onto fitted components: one Arrow-batched numpy
+    """Project rows onto fitted components: one typed mapInArrow numpy
     matmul per batch (components broadcast via task closure — (k, dim)
     floats), emitting scalar ``pc1..pck`` columns (no array outputs —
     driver-hash friendly).  Zero shuffles."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     id_cols = id_cols or ["vec_id"]
     W = np.asarray(components, dtype=np.float64)
     mu = np.asarray(mean, dtype=np.float64)
     k = W.shape[0]
-    id_types = {
-        c: df.schema[c].dataType.simpleString() for c in id_cols
-    }
     out_schema = ", ".join(
-        [f"{c} {t}" for c, t in id_types.items()]
+        [f"{c} {df.schema[c].dataType.simpleString()}" for c in id_cols]
         + [f"{prefix}{i + 1} double" for i in range(k)]
     )
+    n_ids = len(id_cols)
 
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def project(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            S = (X - mu) @ W.T
-            out = {c: pdf[c] for c in id_cols}
-            for i in range(k):
-                out[f"{prefix}{i + 1}"] = S[:, i]
-            yield pd.DataFrame(out)
+            S = (list_matrix(rb.column(n_ids)) - mu) @ W.T
+            yield [rb.column(i) for i in range(n_ids)] + list(S.T)
 
-    return df.select(*id_cols, vec_col).mapInPandas(project, out_schema)
+    return map_in_arrow(df.select(*id_cols, vec_col), project, out_schema)
 
 
 def quantize_int8(
@@ -1066,16 +1007,14 @@ def pq_fit(
     """Learn per-subspace codebooks: returns numpy (m, k, dim/m).
 
     Iteration shape mirrors :func:`kmeans_fit` but covers ALL m
-    subspaces in each pass: one Arrow-batched assign emits per-Arrow-
-    batch partial sums keyed (sub, cell) — an (m·k)-bounded shuffle of
+    subspaces in each pass: one typed ``mapInArrow`` assign emits
+    per-partition partial sums keyed (sub, cell) — an (m·k)-bounded shuffle of
     dim/m-length arrays, never rows — and the driver update touches
     m·k·(dim/m) = k·dim floats.  Init is the deterministic smallest-
     xxhash64 sample (same rule as IVF); empty cells keep their previous
     centroid.  Vectors are L2-normalized first so ADC L2 order matches
     cosine order.
     """
-    import numpy as np
-
     if normalize:
         init = _ivf_centroid_matrix(corpus, k, seed, id_col, vec_col)
     else:
@@ -1108,22 +1047,12 @@ def pq_fit(
     # lazy frame), so the persist is released here — in a ``finally``, so
     # a failed round does not leak it either — instead of tracked for the
     # caller.
-    from real_time_data_pipeline_spark.operators.arrowvec import (
-        list_array,
-        list_matrix,
-    )
-
     vecs = corpus.select(vec_col).persist()
     try:
         for _ in range(iters):
             B = books  # rebind for closure capture per round
 
-            # r11: mapInArrow + flat-buffer reshape (guide §4.2) — one
-            # buffer view per batch instead of one numpy object per row;
-            # identical float64 values, identical partial sums.
             def partials(batches):
-                import pyarrow as pa
-
                 sums = np.zeros((m, k, dsub))
                 counts = np.zeros((m, k), dtype=np.int64)
                 for rb in batches:
@@ -1141,19 +1070,11 @@ def pq_fit(
                         np.add.at(counts[j], cell, 1)
                 nz_j, nz_c = np.nonzero(counts)
                 if len(nz_j):
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(nz_j.astype(np.int32)),
-                            pa.array(nz_c.astype(np.int32)),
-                            pa.array(counts[nz_j, nz_c].astype(np.int64)),
-                            list_array(sums[nz_j, nz_c], pa.float64()),
-                        ],
-                        ["sub", "cell", "n", "s"],
-                    )
+                    yield [nz_j, nz_c, counts[nz_j, nz_c], sums[nz_j, nz_c]]
 
             rows = (
-                vecs.mapInArrow(
-                    partials, "sub int, cell int, n long, s array<double>"
+                map_in_arrow(
+                    vecs, partials, "sub int, cell int, n long, s array<double>"
                 )
                 .groupBy("sub", "cell")
                 .agg(
@@ -1185,12 +1106,8 @@ def pq_encode(
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """Encode every vector as its m nearest-codebook-entry codes
-    (array<int>, one Arrow-batched pass, codebooks in the task
-    closure — m·k·dsub floats).  r11: ``mapInArrow`` + flat-buffer
-    reshape (operators/arrowvec) — the vector column converts to the
-    (n, dim) matrix in one buffer view instead of one numpy object per
-    row, and the codes come back as one flat buffer (guide §4.2); same
-    float64 bytes, bit-identical codes.
+    (array<int>, one typed ``mapInArrow`` pass, codebooks in the task
+    closure — m·k·dsub floats).
 
     The codes come back persisted and tracked (``cache.track``; the
     caller releases them).  Every ADC scoring pass reads them through
@@ -1198,16 +1115,7 @@ def pq_encode(
     encode and scoring passes each hold one Python worker per task
     instead of sharing a task with two (which doubled the worker pool),
     and a codes frame scored more than once is encoded once."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pyarrow as pa
-
     from real_time_data_pipeline_spark.operators import cache
-    from real_time_data_pipeline_spark.operators.arrowvec import (
-        list_array,
-        list_matrix,
-    )
 
     B = np.asarray(books, dtype=np.float64)
     m, k, dsub = B.shape
@@ -1215,7 +1123,7 @@ def pq_encode(
     extra = extra_cols or []
     n_lead = 1 + len(extra)  # id + extras precede the vector column
 
-    def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def encode(batches):
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -1227,321 +1135,104 @@ def pq_encode(
                 S = V[:, j * dsub : (j + 1) * dsub]
                 d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(-1)
                 codes[:, j] = d2.argmin(1)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(i) for i in range(n_lead)]
-                + [list_array(codes, pa.int32())],
-                ["id", *extra, "codes"],
-            )
+            yield [rb.column(i) for i in range(n_lead)] + [codes]
 
-    extra_schema = "".join(
-        f", {c} {corpus.schema[c].dataType.simpleString()}" for c in extra
+    lead_schema = ", ".join(
+        f"{name} {corpus.schema[c].dataType.simpleString()}"
+        for name, c in zip(["id", *extra], [id_col, *extra])
     )
     return cache.track(
-        corpus.select(id_col, *extra, vec_col).mapInArrow(
+        map_in_arrow(
+            corpus.select(id_col, *extra, vec_col),
             encode,
-            f"id {corpus.schema[id_col].dataType.simpleString()}"
-            f"{extra_schema}, codes array<int>",
+            f"{lead_schema}, codes array<int>",
         )
+    )
+
+
+def _unit(vec) -> np.ndarray:
+    v = np.asarray(vec, dtype=np.float64)
+    return v / np.linalg.norm(v)
+
+
+def _adc_table(B: np.ndarray, r: np.ndarray) -> np.ndarray:
+    """(m, k_codebook) squared L2 from each subvector of ``r`` to every
+    entry of its subspace's codebook — a candidate's ADC distance is
+    then m lookups into this table."""
+    m, _, dsub = B.shape
+    return np.stack(
+        [
+            ((B[j] - r[j * dsub : (j + 1) * dsub][None, :]) ** 2).sum(-1)
+            for j in range(m)
+        ]
+    )
+
+
+def _top_per_probe(scored: DataFrame, k: int) -> DataFrame:
+    """Global per-probe selection on (adc_d2 asc, id asc) over the
+    bounded candidate union the per-batch prunes emitted."""
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("id"))
+    return (
+        scored.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .drop("_rk")
     )
 
 
 def pq_topk(
     codes_df: DataFrame,
     books,
-    query_vec,
-    k: int = 10,
-) -> DataFrame:
-    """ADC top-k: build the (m × k_codebook) query-to-entry squared-
-    distance table once (driver), broadcast it via the task closure,
-    then one Arrow-batched pass scores each candidate with m table
-    lookups and emits ONLY its per-batch top-k — the global TakeOrdered
-    sees a bounded candidate union, never the corpus.  Output
-    (id, adc_d2) ascending, deterministic tie-break on id.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
-
-    B = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = B.shape
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qv = qv / np.linalg.norm(qv)
-    tab = np.empty((m, kk))
-    for j in range(m):
-        S = qv[j * dsub : (j + 1) * dsub]
-        tab[j] = ((B[j] - S[None, :]) ** 2).sum(-1)
-
-    # r11: mapInArrow — the codes column converts via one flat-buffer
-    # reshape, the surviving ids come back via one take() (guide §4.2);
-    # same int codes, same float64 table lookups, bit-identical rows.
-    def score(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            C = list_matrix(rb.column(0), dtype=np.int64)
-            d2 = tab[np.arange(m)[None, :], C].sum(1)
-            top = np.argsort(d2, kind="stable")[:k]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(1).take(pa.array(top)),
-                    pa.array(d2[top], type=pa.float64()),
-                ],
-                ["id", "adc_d2"],
-            )
-
-    scored = codes_df.select("codes", "id").mapInArrow(
-        score, f"id {codes_df.schema['id'].dataType.simpleString()}, adc_d2 double"
-    )
-    return scored.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
-
-
-def pq_topk_rerank(
-    corpus: DataFrame,
-    codes_df: DataFrame,
-    books,
-    query_vec,
-    k: int = 10,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id=None,
-) -> DataFrame:
-    """Production PQ search: ADC over the compressed codes produces a
-    ``shortlist`` of candidates (the only corpus-wide pass — m byte
-    lookups per vector), then ONLY those rows are re-ranked with exact
-    cosine against the raw vectors.  Recall is governed by
-    shortlist/k (unit-tested: exact top-10 coverage at C=100 on the
-    test corpus); the exact pass touches C rows regardless of corpus
-    size, joined back via a broadcast of the C-row shortlist.
-
-    Output matches cosine_topk's shape — (query_id, rank, neighbor_id,
-    cos_bp) when ``query_id`` is given (the query row itself excluded
-    from candidates), (rank, neighbor_id, cos_bp) otherwise —
-    deterministic tie-break on id, so callers can substitute this for
-    cosine_topk unchanged.  The rank window runs over the k-row limit
-    output (single tiny partition), not the corpus.
-    """
-    cands = pq_topk(codes_df, books, query_vec, k=shortlist).select(
-        F.col("id").alias(id_col)
-    )
-    sub = corpus.join(F.broadcast(cands), id_col, "left_semi")
-    qn = _norm(F.array(*[F.lit(float(x)) for x in query_vec]))
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _dot(F.col(vec_col), qcol) / (_norm(F.col(vec_col)) * qn)
-    if query_id is not None:
-        sub = sub.filter(F.col(id_col) != F.lit(query_id))
-    top = (
-        sub.select(F.col(id_col), cos.alias("cos"))
-        .orderBy(F.desc("cos"), F.asc(id_col))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("cos"), F.asc(id_col))
-    ranked = top.select(
-        F.row_number().over(w).alias("rank"),
-        F.col(id_col).alias("neighbor_id"),
-        F.floor(F.lit(1e4) * F.col("cos")).cast("bigint").alias("cos_bp"),
-    )
-    if query_id is not None:
-        ranked = ranked.select(
-            F.lit(query_id).alias("query_id"), "rank", "neighbor_id", "cos_bp"
-        )
-    return ranked
-
-
-def pq_topk_multi(
-    codes_df: DataFrame,
-    books,
     probes: list,
     k: int = 10,
 ) -> DataFrame:
-    """Multi-probe :func:`pq_topk`: score EVERY probe in ONE Arrow pass
-    over the codes instead of one corpus scan per probe (the pre-r10
-    per-leg loop shape — 5 probes paid 5 scans + 5 global sorts).
+    """ADC top-k for a batch of probes ``[(query_id, query_vec), ...]``
+    (a single query is a one-element list).  Each probe's
+    (m × k_codebook) query-to-entry squared-distance table is built once
+    on the driver and closed over; ONE typed Arrow pass over the codes
+    scores every probe with m table lookups per row and emits only each
+    probe's per-batch top-k, closed under ties (see
+    :func:`_tie_closed_top`) — the global per-probe window sees a
+    bounded candidate union, never the corpus.
 
-    ``probes`` is ``[(query_id, query_vec), ...]``.  Per probe the ADC
-    table build, the m-lookup scoring, and the per-batch ``stable``
-    argsort truncation are expression-for-expression the single-probe
-    code, so each probe's candidate union — and therefore the final
-    (adc_d2 asc, id asc) top-k — is bit-identical to calling
-    :func:`pq_topk` once per probe; the global per-probe selection runs
-    as one window over the bounded candidate union instead of one
-    orderBy().limit() job per probe.
-
-    Output: (query_id bigint, id, adc_d2), k rows per probe.
+    Output: (query_id, id, adc_d2), k rows per probe ranked on
+    (adc_d2 asc, id asc); ``query_id`` has the codes' id type.
     """
-    import numpy as np
-
-    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
-
     if not probes:
         # Fail on the driver with a real message; an empty probe list
-        # would otherwise surface as an opaque executor-side error
-        # (ADVICE r10).
-        raise ValueError("pq_topk_multi: probes must be non-empty")
+        # would otherwise surface as an opaque executor-side error.
+        raise ValueError("pq_topk: probes must be non-empty")
     B = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = B.shape
-    tabs = []
-    for qid, query_vec in probes:
-        qv = np.asarray(query_vec, dtype=np.float64)
-        qv = qv / np.linalg.norm(qv)
-        tab = np.empty((m, kk))
-        for j in range(m):
-            S = qv[j * dsub : (j + 1) * dsub]
-            tab[j] = ((B[j] - S[None, :]) ** 2).sum(-1)
-        tabs.append((int(qid), tab))
+    tabs = [(qid, _adc_table(B, _unit(vec))) for qid, vec in probes]
+    lookup = np.arange(B.shape[0])[None, :]
 
-    # r11: mapInArrow — one flat-buffer reshape of the codes column per
-    # batch, surviving ids via one take() over the concatenated per-probe
-    # top indices (guide §4.2); batch boundaries and per-probe argsorts
-    # are unchanged, so the candidate union is bit-identical.
     def score(batches):
-        import pyarrow as pa
-
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             C = list_matrix(rb.column(0), dtype=np.int64)
             qids, tops, d2s = [], [], []
             for qid, tab in tabs:
-                d2 = tab[np.arange(m)[None, :], C].sum(1)
-                top = np.argsort(d2, kind="stable")[:k]
-                qids.append(np.full(len(top), qid, dtype=np.int64))
+                d2 = tab[lookup, C].sum(1)
+                top = _tie_closed_top(d2, k)
+                qids.append(np.full(len(top), qid))
                 tops.append(top)
                 d2s.append(d2[top])
-            idx = pa.array(np.concatenate(tops))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(qids)),
-                    rb.column(1).take(idx),
-                    pa.array(np.concatenate(d2s), type=pa.float64()),
-                ],
-                ["query_id", "id", "adc_d2"],
-            )
+            yield [
+                np.concatenate(qids),
+                rb.column(1).take(np.concatenate(tops)),
+                np.concatenate(d2s),
+            ]
 
     id_t = codes_df.schema["id"].dataType.simpleString()
-    scored = codes_df.select("codes", "id").mapInArrow(
-        score, f"query_id bigint, id {id_t}, adc_d2 double"
+    scored = map_in_arrow(
+        codes_df.select("codes", "id"),
+        score,
+        f"query_id {id_t}, id {id_t}, adc_d2 double",
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    return _top_per_probe(scored, k)
 
 
-def ivfpq_topk_multi(
-    codes_df: DataFrame,
-    coarse,
-    books,
-    probes: list,
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Multi-probe :func:`ivfpq_topk` — one Arrow pass scores every
-    probe (``[(query_id, query_vec), ...]``) instead of one cell-filtered
-    corpus scan per probe.  Per-probe cell ranking, residual ADC tables,
-    per-cell masking and the per-batch ``stable`` argsort truncation are
-    the single-probe expressions verbatim, so each probe's output rows
-    are bit-identical to its own :func:`ivfpq_topk` call PROVIDED every
-    probe scans the same row set — enforced here by requiring the probed
-    cell sets to be equal across probes (the full-probe certification
-    config, nprobe == n_cells, always satisfies it); otherwise the
-    per-batch truncation could see different batch contents than the
-    single-probe filter and the caller must fall back to per-probe calls.
-
-    Output: (query_id bigint, id, cell, adc_d2), k rows per probe.
-    """
-    import numpy as np
-
-    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
-
-    if not probes:
-        # Driver-side guard (ADVICE r10) — see pq_topk_multi.
-        raise ValueError("ivfpq_topk_multi: probes must be non-empty")
-    Cm = np.asarray(coarse, dtype=np.float64)
-    B = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = B.shape
-    per_probe = []
-    for qid, query_vec in probes:
-        qv = np.asarray(query_vec, dtype=np.float64)
-        qv = qv / np.linalg.norm(qv)
-        d2cells = ((Cm - qv[None, :]) ** 2).sum(1)
-        probe_cells = np.argsort(d2cells, kind="stable")[:nprobe]
-        tabs = {}
-        for c in probe_cells:
-            r = qv - Cm[c]
-            tabs[int(c)] = np.stack(
-                [
-                    ((B[j] - r[j * dsub : (j + 1) * dsub][None, :]) ** 2).sum(-1)
-                    for j in range(m)
-                ]
-            )
-        per_probe.append((int(qid), [int(c) for c in probe_cells], tabs))
-
-    cell_sets = {frozenset(cells) for _, cells, _ in per_probe}
-    if len(cell_sets) != 1:
-        raise ValueError(
-            "ivfpq_topk_multi requires identical probed-cell sets per "
-            "probe (batch equivalence with the per-probe plan); use "
-            "ivfpq_topk per probe for divergent nprobe selections"
-        )
-    probe_list = per_probe[0][1]
-
-    # r11: mapInArrow + flat-buffer reshape (guide §4.2) — identical
-    # per-probe masking/argsort over identical batch contents, so the
-    # candidate union is bit-identical to the pandas pass.
-    def score(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            C = list_matrix(rb.column(0), dtype=np.int64)
-            cells = rb.column(1).to_numpy()
-            qids, tops, out_cells, d2s = [], [], [], []
-            for qid, plist, tabs in per_probe:
-                d2 = np.empty(len(C))
-                for c in plist:
-                    mask = cells == c
-                    if mask.any():
-                        d2[mask] = tabs[c][
-                            np.arange(m)[None, :], C[mask]
-                        ].sum(1)
-                top = np.argsort(d2, kind="stable")[:k]
-                qids.append(np.full(len(top), qid, dtype=np.int64))
-                tops.append(top)
-                out_cells.append(cells[top])
-                d2s.append(d2[top])
-            idx = pa.array(np.concatenate(tops))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(qids)),
-                    rb.column(2).take(idx),
-                    pa.array(
-                        np.concatenate(out_cells).astype(np.int32)
-                    ),
-                    pa.array(np.concatenate(d2s), type=pa.float64()),
-                ],
-                ["query_id", "id", "cell", "adc_d2"],
-            )
-
-    id_t = codes_df.schema["id"].dataType.simpleString()
-    scored = codes_df.filter(F.col("cell").isin(probe_list)).select(
-        "codes", "cell", "id"
-    ).mapInArrow(
-        score, f"query_id bigint, id {id_t}, cell int, adc_d2 double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def pq_topk_rerank_multi(
+def pq_topk_rerank(
     corpus: DataFrame,
     codes_df: DataFrame,
     books,
@@ -1551,30 +1242,31 @@ def pq_topk_rerank_multi(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Multi-probe :func:`pq_topk_rerank`: ONE ADC pass shortlists every
-    probe (via :func:`pq_topk_multi`), then ONE candidate-bounded exact
-    re-rank scores all shortlists together.  The re-rank cosine is the
-    same sequential double fold over the same (vector, query) values —
-    the query vector arrives via a broadcast (query_id, vec) join rather
-    than per-leg literals, which changes nothing about the fold — and
-    the per-query (cos desc, id asc) row_number selection is exactly the
-    per-leg orderBy().limit(k) row set, so output rows are bit-identical
-    to unioning one :func:`pq_topk_rerank` call per probe.
+    """Production PQ search: ONE ADC pass (:func:`pq_topk`) produces a
+    ``shortlist`` of candidates per probe (the only corpus-wide pass —
+    m byte lookups per vector), then ONLY those rows are re-ranked with
+    exact cosine against the raw vectors.  Recall is governed by
+    shortlist/k (unit-tested: exact top-10 coverage at C=100 on the
+    test corpus); the exact pass touches |probes|·C rows regardless of
+    corpus size.
 
-    Output matches the per-leg union shape: (query_id, rank,
-    neighbor_id, cos_bp); the probe row itself is excluded per leg.
+    The re-rank cosine is the same sequential double fold as
+    :func:`cosine_topk` (the query vector arrives via a broadcast
+    (query_id, vec) join) with the same (cos desc, id asc) tie-break,
+    so the output — (query_id, rank, neighbor_id, cos_bp), the probe
+    row itself excluded — substitutes for cosine_topk's unchanged
+    whenever the shortlist covers the true top-k.
     """
-    from real_time_data_pipeline_spark.operators.arrowvec import local_frame
-
     spark = corpus.sparkSession
-    cands = pq_topk_multi(codes_df, books, probes, k=shortlist).select(
+    cands = pq_topk(codes_df, books, probes, k=shortlist).select(
         "query_id", F.col("id").alias(id_col)
     )
+    id_t = corpus.schema[id_col].dataType.simpleString()
     qdf = F.broadcast(
         local_frame(
             spark,
-            [(int(qid), [float(x) for x in vec]) for qid, vec in probes],
-            "query_id bigint, _qv array<double>",
+            [(qid, [float(x) for x in vec]) for qid, vec in probes],
+            f"query_id {id_t}, _qv array<double>",
         )
     )
     # The candidate set is len(probes)·shortlist rows — broadcast-hint it
@@ -1583,7 +1275,7 @@ def pq_topk_rerank_multi(
     # shortlist IS the corpus per probe; a forced broadcast there is
     # ~|probes|x the corpus in one relation and hits the broadcast/driver
     # ceiling long before the join needs help — let the planner (AQE)
-    # decide instead (ADVICE r10).
+    # decide instead.
     cands_small = len(probes) * shortlist <= 1_000_000
     sub = (
         corpus.join(
@@ -1661,73 +1353,81 @@ def ivfpq_topk(
     codes_df: DataFrame,
     coarse,
     books,
-    query_vec,
+    probes: list,
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF-PQ query: rank coarse cells by distance to the query, keep
+    """IVF-PQ query for a batch of probes ``[(query_id, query_vec),
+    ...]``: rank coarse cells by distance to each probe and keep
     ``nprobe``; build ONE ADC table per probed cell (against the
-    query's residual to THAT cell — nprobe·m·k floats, task closure);
-    score only rows in probed cells (the filter prunes partitions when
-    ``codes_df`` is persisted partitioned-by-cell, same as ivf_index)
-    with m lookups each, emitting per-batch top-k.  Output
-    (id, cell, adc_d2) ascending, tie-break on id.
+    probe's residual to THAT cell — nprobe·m·k floats per probe, task
+    closure); score only rows in probed cells (the filter prunes
+    partitions when ``codes_df`` is persisted partitioned-by-cell, same
+    as ivf_index) with m lookups each, in ONE typed Arrow pass for every
+    probe, emitting each probe's tie-closed per-batch top-k.
+
+    All probes share the one cell-filtered scan, so their probed cell
+    sets must be equal (the full-probe certification config,
+    nprobe == n_cells, always satisfies it); probes whose nearest cells
+    differ are rejected on the driver — call once per probe.
+
+    Output: (query_id, id, cell, adc_d2), k rows per probe ranked on
+    (adc_d2 asc, id asc); ``query_id`` has the codes' id type.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
-
+    if not probes:
+        raise ValueError("ivfpq_topk: probes must be non-empty")
     Cm = np.asarray(coarse, dtype=np.float64)
     B = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = B.shape
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qv = qv / np.linalg.norm(qv)
-    d2cells = ((Cm - qv[None, :]) ** 2).sum(1)
-    probe = np.argsort(d2cells, kind="stable")[:nprobe]
-    tabs = {}
-    for c in probe:
-        r = qv - Cm[c]
-        tabs[int(c)] = np.stack(
-            [
-                ((B[j] - r[j * dsub : (j + 1) * dsub][None, :]) ** 2).sum(-1)
-                for j in range(m)
-            ]
+    per_probe = []
+    for qid, vec in probes:
+        qv = _unit(vec)
+        near = np.argsort(((Cm - qv[None, :]) ** 2).sum(1), kind="stable")
+        per_probe.append(
+            (qid, {int(c): _adc_table(B, qv - Cm[c]) for c in near[:nprobe]})
         )
+    if len({frozenset(tabs) for _, tabs in per_probe}) != 1:
+        raise ValueError(
+            "ivfpq_topk scores all probes in one scan of the same probed "
+            f"cells, but these probes select different cells at "
+            f"nprobe={nprobe}; call ivfpq_topk once per probe"
+        )
+    probe_cells = sorted(per_probe[0][1])
+    lookup = np.arange(B.shape[0])[None, :]
 
-    probe_list = [int(c) for c in probe]
-
-    # r11: mapInArrow + flat-buffer reshape (guide §4.2) — identical
-    # masking/argsort over identical batch contents, bit-identical rows.
     def score(batches):
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             C = list_matrix(rb.column(0), dtype=np.int64)
-            cells = rb.column(1).to_numpy()
-            d2 = np.empty(len(C))
-            for c in probe_list:
-                mask = cells == c
-                if mask.any():
-                    d2[mask] = tabs[c][
-                        np.arange(m)[None, :], C[mask]
-                    ].sum(1)
-            top = np.argsort(d2, kind="stable")[:k]
-            idx = pa.array(top)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(2).take(idx),
-                    pa.array(cells[top].astype(np.int32)),
-                    pa.array(d2[top], type=pa.float64()),
-                ],
-                ["id", "cell", "adc_d2"],
-            )
+            cells = rb.column(1).to_numpy(zero_copy_only=False)
+            qids, tops, d2s = [], [], []
+            for qid, tabs in per_probe:
+                d2 = np.empty(len(C))
+                for c, tab in tabs.items():
+                    mask = cells == c
+                    if mask.any():
+                        d2[mask] = tab[lookup, C[mask]].sum(1)
+                top = _tie_closed_top(d2, k)
+                qids.append(np.full(len(top), qid))
+                tops.append(top)
+                d2s.append(d2[top])
+            idx = np.concatenate(tops)
+            yield [
+                np.concatenate(qids),
+                rb.column(2).take(idx),
+                cells[idx],
+                np.concatenate(d2s),
+            ]
 
     id_t = codes_df.schema["id"].dataType.simpleString()
-    scored = codes_df.filter(F.col("cell").isin(probe_list)).select(
-        "codes", "cell", "id"
-    ).mapInArrow(score, f"id {id_t}, cell int, adc_d2 double")
-    return scored.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
+    scored = map_in_arrow(
+        codes_df.filter(F.col("cell").isin(probe_cells)).select(
+            "codes", "cell", "id"
+        ),
+        score,
+        f"query_id {id_t}, id {id_t}, cell int, adc_d2 double",
+    )
+    return _top_per_probe(scored, k)
 
 
 def semdedup_cells(
@@ -1780,8 +1480,6 @@ def semdedup_cells(
         .limit(k_cells)
         .collect()  # k rows — bounded by design
     )
-    from real_time_data_pipeline_spark.operators.arrowvec import local_frame
-
     seed_df = F.broadcast(
         local_frame(
             corpus.sparkSession,
@@ -1870,7 +1568,7 @@ def kmeans_fixedpoint(
     recompute the whole fit with the iterations unrolled.
 
     Scale shape identical to kmeans_fit: per iteration one
-    Arrow-batched numpy assignment pass over the corpus (int64
+    typed ``mapInArrow`` assignment pass over the corpus (int64
     matmul-free distance against the broadcast k×dim integer centroid
     matrix) + one (cell, dim)-grain partial-aggregated shuffle; k×dim
     centroid state is driver-resident; empty cells keep their previous
@@ -1879,11 +1577,6 @@ def kmeans_fixedpoint(
     ~1e14 rows.
 
     Output: (id, cell, dist) under the FINAL centroids."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     from real_time_data_pipeline_spark.operators.curation import (
         portable_hash48,
     )
@@ -1908,33 +1601,24 @@ def kmeans_fixedpoint(
     def trunc_div(s: int, n: int) -> int:
         return -((-s) // n) if s < 0 else s // n
 
-    def assign_factory(Cm):
-        Cl = Cm.copy()
-
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["qv"]]
-                )
-                # (n, k) int64 squared distances; argmin takes the
-                # FIRST minimal index == ORDER BY dist, cell
-                d = ((V[:, None, :] - Cl[None, :, :]) ** 2).sum(axis=2)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "cell": d.argmin(axis=1).astype("int64"),
-                        "dist": d.min(axis=1).astype("int64"),
-                    }
-                )
-
-        return assign
-
     id_t = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_t}, cell bigint, dist bigint"
+
+    def assign_pass(Cm):
+        def assign(batches):
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                V = list_matrix(rb.column(1), dtype=np.int64)
+                # (n, k) int64 squared distances; argmin takes the
+                # FIRST minimal index == ORDER BY dist, cell
+                d = ((V[:, None, :] - Cm[None, :, :]) ** 2).sum(axis=2)
+                yield [rb.column(0), d.argmin(axis=1), d.min(axis=1)]
+
+        return map_in_arrow(quant, assign, out_schema)
+
     for _ in range(iters):
-        assigned = quant.mapInPandas(assign_factory(C), out_schema)
+        assigned = assign_pass(C)
         stats = (
             assigned.join(quant, id_col)
             .select("cell", F.posexplode("qv").alias("pos", "x"))
@@ -1953,9 +1637,7 @@ def kmeans_fixedpoint(
             for r in rows:
                 new[cell, r["pos"]] = trunc_div(int(r["s"]), int(r["n"]))
         C = new
-    return quant.mapInPandas(assign_factory(C), out_schema).select(
-        id_col, "cell", "dist"
-    )
+    return assign_pass(C)
 
 
 def pca_power_top1(
@@ -1992,15 +1674,10 @@ def pca_power_top1(
     corpus scales where n²·quant_scale² nears int64, widen the scatter
     aggregate to DECIMAL(38,0) — the quantized sums stay exact.
 
-    Scale shape: ONE mapInPandas pass emits per-partition int64 Gram
+    Scale shape: ONE typed mapInArrow pass emits per-partition int64 Gram
     partials (dim² + dim + 1 integers — numpy int64 matmul is exact);
     the dim×dim iteration is driver-resident; the projection is one
     JVM fold per row against the broadcast literal component."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     quant = corpus.select(
         F.col(id_col),
         F.transform(
@@ -2012,28 +1689,24 @@ def pca_power_top1(
     )
     dim = len(corpus.select(vec_col).first()[0])
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches):
         n_tot = 0
         s_tot = np.zeros(dim, dtype=np.int64)
         g_tot = np.zeros((dim, dim), dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
+            Q = list_matrix(rb.column(0), dtype=np.int64)
             n_tot += len(Q)
             s_tot += Q.sum(axis=0)
             g_tot += Q.T @ Q
         if n_tot:
-            yield pd.DataFrame(
-                {
-                    "n": [n_tot],
-                    "s": [s_tot.tolist()],
-                    "g": [g_tot.flatten().tolist()],
-                }
-            )
+            yield [[n_tot], s_tot[None, :], g_tot.reshape(1, -1)]
 
-    parts = quant.mapInPandas(
-        partials, "n bigint, s array<bigint>, g array<bigint>"
+    parts = map_in_arrow(
+        quant.select("qv"),
+        partials,
+        "n bigint, s array<bigint>, g array<bigint>",
     ).collect()  # one row per partition — bounded
     n = sum(int(p["n"]) for p in parts)
     s = [sum(int(p["s"][d]) for p in parts) for d in range(dim)]

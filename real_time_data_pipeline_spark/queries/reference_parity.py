@@ -1049,10 +1049,6 @@ def stream_capture(
     return spark.read.schema(schema or sdf.schema).parquet(stage)
 
 
-def _collect_stream(df, name: str = "collect"):
-    return stream_capture(df, name, output_mode="append")
-
-
 def q_stream_validate(spark, sf_dir):
     """The reference's CORE path — per-record validation (P3/P4,
     transaction_processor.py:218-243) — executed by the streaming
@@ -1067,7 +1063,7 @@ def q_stream_validate(spark, sf_dir):
             "validation_result"
         ),
     )
-    return _collect_stream(out, "stream_validate")
+    return stream_capture(out, "stream_validate")
 
 
 QUERIES["stream_validate"] = q_stream_validate

@@ -33,13 +33,13 @@ def q_ann_bruteforce_topk(spark, sf_dir):
 
 def q_ann_gemm_topk(spark, sf_dir):
     """Blocked-GEMM top-10 with candidate-bounded exact re-rank
-    (oracle-backed since round 5): the GEMM pass SELECTS k+margin
+    (oracle-backed): the GEMM pass SELECTS the tie-closed top-k
     candidates per query, and the emitted cos_bp/rank are recomputed
     with the same sequential fold as the brute-force path — bit-identical
     output, so this shares ann_bruteforce_topk's value-hash oracle while
     keeping the vectorized scan the scale path uses."""
     emb, queries = _corpus_and_queries(spark, sf_dir)
-    return similarity.cosine_topk_gemm(emb, queries, k=K, exact_rerank=True)
+    return similarity.cosine_topk_gemm(emb, queries, k=K)
 
 
 def q_ann_lsh_topk(spark, sf_dir):
@@ -318,7 +318,7 @@ ORACLES["stream_ann_ivf_append"] = ORACLES["ann_bruteforce_topk"]
 
 
 def q_embedding_pca(spark, sf_dir):
-    """Distributed PCA (Gram-partial mapInPandas fit + Arrow-batched
+    """Distributed PCA (Gram-partial mapInArrow fit + mapInArrow
     projection): top-4 component scores per vector, scalar columns.
     Rows-only: eigendecomposition is float — last-ulp reduce order and
     LAPACK variation make value hashes unstable by design; the unit
@@ -441,7 +441,7 @@ def q_ann_pq_topk(spark, sf_dir):
     codes = similarity.pq_encode(emb, books)
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     return similarity.pq_topk_rerank(
-        emb, codes, books, qvec, k=K, shortlist=shortlist, query_id=0
+        emb, codes, books, [(0, qvec)], k=K, shortlist=shortlist
     )
 
 
@@ -479,10 +479,8 @@ def q_ann_pq_topk_rerank(spark, sf_dir):
         (r["vec_id"], r["embedding"])
         for r in sorted(qrows, key=lambda r: r["vec_id"])
     ]
-    # One ADC pass + one exact re-rank for ALL probes (r10 optimization:
-    # the per-probe leg loop paid 5 corpus scans + 5 global sorts for
-    # bit-identical rows — see operators/similarity.pq_topk_rerank_multi).
-    return similarity.pq_topk_rerank_multi(
+    # One ADC pass + one exact re-rank for ALL probes.
+    return similarity.pq_topk_rerank(
         emb,
         codes,
         books,
@@ -539,9 +537,8 @@ def q_ann_pq_shortlist_superset(spark, sf_dir):
         (r["vec_id"], r["embedding"])
         for r in sorted(qrows, key=lambda r: r["vec_id"])
     ]
-    # One ADC pass for ALL probes (r10: the per-probe leg loop paid 5
-    # corpus scans + 5 global sorts for bit-identical shortlists).
-    sl = similarity.pq_topk_multi(codes, books, probes, k=shortlist).select(
+    # One ADC pass for ALL probes.
+    sl = similarity.pq_topk(codes, books, probes, k=shortlist).select(
         "query_id",
         F.col("id").alias("neighbor_id"),
         F.lit(True).alias("_in_sl"),
@@ -732,7 +729,9 @@ def q_ann_ivfpq_topk(spark, sf_dir):
         emb, n_cells=16, m=8, k=16, iters=2
     )
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return similarity.ivfpq_topk(codes, Cm, books, qvec, k=K, nprobe=4)
+    return similarity.ivfpq_topk(
+        codes, Cm, books, [(0, qvec)], k=K, nprobe=4
+    ).drop("query_id")
 
 
 QUERIES["ann_ivfpq_topk"] = q_ann_ivfpq_topk  # rows-only (iterative fit)
@@ -783,12 +782,9 @@ def q_ann_ivfpq_shortlist_superset(spark, sf_dir):
         (r["vec_id"], r["embedding"])
         for r in sorted(qrows, key=lambda r: r["vec_id"])
     ]
-    # One full-probe ADC pass for ALL probes (r10: the per-probe leg
-    # loop re-ran the ENTIRE uncached assign→residual→encode chain per
-    # probe — 5x the index build — for bit-identical shortlists; at
-    # nprobe == n_cells every probe scans the same row set, the
-    # batch-equivalence precondition ivfpq_topk_multi enforces).
-    sl = similarity.ivfpq_topk_multi(
+    # One full-probe ADC pass for ALL probes: at nprobe == n_cells every
+    # probe scans the same cells, which one ivfpq_topk call requires.
+    sl = similarity.ivfpq_topk(
         codes, Cm, books, probes, k=shortlist, nprobe=n_cells,
     ).select(
         "query_id",

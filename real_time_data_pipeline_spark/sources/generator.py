@@ -153,16 +153,3 @@ def synthetic_accounts(
         _pick(["checking", "savings", "credit", "loan", "investment"], F.col("_r_type")).alias("account_type"),
         _pick(["active", "active", "active", "frozen", "closed"], F.col("_r_status")).alias("account_status"),
     )
-
-
-def synthetic_customers(spark: SparkSession, n_customers: int = 50, seed: int = 11) -> DataFrame:
-    """Customers dimension (FIXTURES.md §3).  Same rand-materialization
-    discipline as synthetic_accounts."""
-    df = spark.range(1, n_customers + 1).select(
-        "id", F.rand(seed).alias("_r_seg")
-    )
-    return df.select(
-        F.concat(F.lit("CUST"), F.lpad(F.col("id").cast("string"), 6, "0")).alias("customer_id"),
-        F.concat(F.lit("Customer "), F.col("id").cast("string")).alias("name"),
-        _pick(["retail", "premium", "business"], F.col("_r_seg")).alias("segment"),
-    )

@@ -162,17 +162,6 @@ def partitioned_parquet_sink(
     )
 
 
-def foreach_batch_collect(df: DataFrame, out: list) -> StreamingQuery:
-    """Test sink: append each micro-batch's rows to a driver-side list.
-    Test-only by design — a driver-side collect of the full stream is the
-    anti-pattern the engine otherwise avoids."""
-
-    def _collect(batch: DataFrame, batch_id: int) -> None:
-        out.extend(batch.collect())
-
-    return df.writeStream.foreachBatch(_collect).outputMode("append").start()
-
-
 # ------------------------------------------------- upsert snapshot sink
 
 def _snapshot_versions(spark, path: str) -> list[int]:

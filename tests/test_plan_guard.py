@@ -275,6 +275,23 @@ def _python_chains(df) -> list[str]:
     return crowded
 
 
+def _map_in_pandas_nodes(df) -> list[str]:
+    """MapInPandas nodes in the plan, cached plans included (a vector
+    pass behind a tracked persist runs inside the cached relation)."""
+    found = []
+
+    def visit(node):
+        for n in _walk(node):
+            name = n.nodeName()
+            if name.startswith("MapInPandas"):
+                found.append(name)
+            if name.startswith("InMemoryTableScan"):
+                visit(n.relation().cachedPlan())
+
+    visit(df._jdf.queryExecution().executedPlan())
+    return found
+
+
 def _python_eval_nodes(df) -> tuple[list[str], list[str]]:
     """(row_wise, arrow_batched) Python-exec node names in the plan."""
     plan = df._jdf.queryExecution().executedPlan()
@@ -359,6 +376,7 @@ def registry_plan_scan(spark, sf_dir):
             "py_row": row_wise,
             "py_arrow": arrow,
             "py_chain": _python_chains(df),
+            "map_in_pandas": _map_in_pandas_nodes(df),
             "fat": _fat_scans(df),
             "module": name2mod.get(name, "?"),
         }
@@ -474,6 +492,39 @@ def test_one_python_worker_per_task(registry_plan_scan):
         "one kernel, put a tracked persist between them, or add a "
         "reviewed PYTHON_CHAIN_ALLOWED entry with a reason"
     )
+
+
+def _is_vector_query(name: str) -> bool:
+    return name.startswith(("ann_", "dedup_embedding")) or name in {
+        "kmeans_clusters", "embedding_pca", "pca_power_top1", "semdedup",
+    }
+
+
+def test_vector_queries_run_no_map_in_pandas(registry_plan_scan):
+    """Vectors enter Python only through the typed Arrow path
+    (operators/arrowvec.map_in_arrow): a ``mapInPandas`` vector pass
+    materializes one numpy object per cell and emits untyped columns."""
+    family = {n for n in registry_plan_scan if _is_vector_query(n)}
+    assert "ann_pq_topk" in family and "semdedup" in family
+    pandas = {
+        n: registry_plan_scan[n]["map_in_pandas"]
+        for n in sorted(family)
+        if registry_plan_scan[n]["map_in_pandas"]
+    }
+    assert not pandas, f"mapInPandas in vector queries: {pandas}"
+
+
+def test_map_in_pandas_guard_sees_cached_plans(spark):
+    from real_time_data_pipeline_spark.operators import cache
+
+    def ident(batches):
+        yield from batches
+
+    pdf = spark.range(10).mapInPandas(ident, "id long")
+    assert _map_in_pandas_nodes(pdf)
+    assert _map_in_pandas_nodes(cache.track(pdf).select("id"))
+    assert _map_in_pandas_nodes(spark.range(10)) == []
+    cache.release_all()
 
 
 def test_python_chain_guard_catches_a_real_chain(spark):

@@ -320,3 +320,54 @@ def test_drift_partials_merge_associative(spark):
     assert got == expected
     # the vanished group is pinned to total drift in both shapes
     assert any(g == "gone" and tv == 10_000 for g, tv, _, _ in got)
+
+
+def _sorted_rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_quality_verdicts_shared_tokens_identical(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from real_time_data_pipeline_spark.operators import curation
+    from real_time_data_pipeline_spark.operators.dedup import tokens_col
+    from real_time_data_pipeline_spark.schemas import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    bench = docs.filter(docs.source == "src0")
+    toksf = docs.select(
+        F.col("doc_id"),
+        F.length(F.col("text")).alias("n_chars"),
+        tokens_col("text").alias("toks"),
+    )
+    base = curation.quality_verdicts(docs, bench)
+    shared = curation.quality_verdicts(docs, bench, tokens_frame=toksf)
+    cols = base.columns
+    assert _sorted_rows(base, cols) == _sorted_rows(shared, cols)
+
+
+def test_near_dup_text_signals_shared_tokens_identical(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from real_time_data_pipeline_spark.operators.dedup import (
+        near_dup_text_signals,
+        tokens_col,
+    )
+    from real_time_data_pipeline_spark.schemas import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    toksf = docs.select(
+        F.col("doc_id"),
+        F.length(F.col("text")).alias("n_chars"),
+        tokens_col("text").alias("toks"),
+    )
+    base = near_dup_text_signals(docs, jaccard_threshold=0.8)
+    shared = near_dup_text_signals(
+        docs, jaccard_threshold=0.8, tokens_frame=toksf
+    )
+    for key, cols in (
+        ("exact_flags", ["doc_id", "is_exact_dup"]),
+        ("exact_edges", ["id_a", "id_b"]),
+        ("mh_pairs", ["id_a", "id_b"]),
+    ):
+        assert _sorted_rows(base[key], cols) == _sorted_rows(shared[key], cols), key
