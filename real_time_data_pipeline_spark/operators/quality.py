@@ -12,14 +12,20 @@ whole batch, so that's what this module does.
 Failure messages mirror validator.py:171-174: "Failed {type}: {kwargs}".
 
 Scale: compile once per suite (driver side), evaluate as whole-stage
-codegen.  The uniqueness expectation is the only one needing a shuffle;
+codegen.  The validation-results artifact is compiled once into its
+Columns (:func:`compile_results`); the streaming sink compiles when it
+starts, and each micro-batch runs only the returned ``apply`` — the
+Columns re-resolve against every batch, so nothing is rebuilt per
+trigger.  The uniqueness expectation is the only one needing a shuffle;
 it uses a window count over the key rather than a self-join.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
-from typing import Any
+from functools import reduce
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -144,35 +150,28 @@ def apply_suite(
     return df.withColumn(valid_col, valid).withColumn(errors_col, errors)
 
 
-def validation_results(
-    df: DataFrame, suite: list[Expectation], run_id: str
-) -> DataFrame:
-    """Per-run validation-results artifact (reference
-    transaction_validator.py:228-256 ``save_validation_results`` persists
-    one JSON summary per run; at engine scale the artifact is a *table*:
-    one row per expectation, denormalized with the run rollup, keyed by
-    ``run_id`` so runs partition cleanly).
+def compile_results(suite: list[Expectation]) -> Callable[[DataFrame], DataFrame]:
+    """Suite → ``apply(df)``: the validation-results plan, its Columns
+    built once.  They are unresolved, so they re-resolve against each
+    frame ``apply`` gets; ``apply`` only wires them on (~50 py4j round
+    trips, where building them takes thousands).
 
-    Columns: run_id, column, expectation_type, n_pass, n_fail, total,
-    valid_rows, invalid_rows, success_rate_bp (integer basis points,
-    half-up — float rates don't hash stably cross-engine).  Everything is
-    computed in ONE aggregate pass over the batch."""
-    flags = df.select(
-        *[compile_expectation(e).alias(f"p_{i}") for i, e in enumerate(suite)]
-    )
-    all_valid = F.col("p_0")
-    for i in range(1, len(suite)):
-        all_valid = all_valid & F.col(f"p_{i}")
+    Columns: column, expectation_type, n_pass, n_fail, total, valid_rows,
+    invalid_rows, success_rate_bp (integer basis points, half-up — float
+    rates don't hash stably cross-engine), all from ONE aggregate pass."""
+    # Materialize each predicate as a boolean column first: window-based
+    # expectations (unique) are not allowed inside aggregate functions.
+    flags = [compile_expectation(e).alias(f"p_{i}") for i, e in enumerate(suite)]
+    passed = [F.col(f"p_{i}") for i in range(len(suite))]
+    valid = reduce(operator.and_, passed)
     aggs = [
         F.count("*").alias("total"),
-        F.sum(F.when(all_valid, 1).otherwise(0)).cast("long").alias("valid_rows"),
+        F.sum(F.when(valid, 1).otherwise(0)).cast("long").alias("valid_rows"),
     ]
-    for i, _ in enumerate(suite):
-        p = F.col(f"p_{i}")
+    for i, p in enumerate(passed):
         aggs.append(F.sum(F.when(p, 1).otherwise(0)).alias(f"pass_{i}"))
         aggs.append(F.sum(F.when(~p, 1).otherwise(0)).alias(f"fail_{i}"))
-    wide = flags.agg(*aggs)
-    rows = [
+    rules = [
         F.struct(
             F.lit(e.column).alias("column"),
             F.lit(e.expectation_type).alias("expectation_type"),
@@ -181,24 +180,33 @@ def validation_results(
         )
         for i, e in enumerate(suite)
     ]
-    return wide.select(
-        F.lit(run_id).alias("run_id"),
-        F.explode(F.array(*rows)).alias("m"),
-        "total",
-        "valid_rows",
+    per_rule = F.inline(F.array(*rules))
+    rollup = [
+        F.col("total"),
+        F.col("valid_rows"),
         (F.col("total") - F.col("valid_rows")).alias("invalid_rows"),
         F.expr(
             "CASE WHEN total = 0 THEN CAST(0 AS BIGINT) ELSE "
             "CAST(FLOOR((2e0 * 10000 * valid_rows + total) / (2e0 * total)) AS BIGINT) END"
         ).alias("success_rate_bp"),
-    ).select(
-        "run_id",
-        "m.*",
-        "total",
-        "valid_rows",
-        "invalid_rows",
-        "success_rate_bp",
-    )
+    ]
+
+    def apply(df: DataFrame) -> DataFrame:
+        return df.select(*flags).agg(*aggs).select(per_rule, *rollup)
+
+    return apply
+
+
+def validation_results(
+    df: DataFrame, suite: list[Expectation], run_id: str
+) -> DataFrame:
+    """Per-run validation-results artifact (reference
+    transaction_validator.py:228-256 ``save_validation_results`` persists
+    one JSON summary per run; at engine scale the artifact is a *table*:
+    one row per expectation, denormalized with the run rollup, keyed by
+    ``run_id`` so runs partition cleanly).  Columns: run_id, then those
+    of :func:`compile_results`."""
+    return compile_results(suite)(df).select(F.lit(run_id).alias("run_id"), "*")
 
 
 def save_validation_results(
@@ -212,9 +220,12 @@ def save_validation_results(
     run_id idempotent — the property the streaming sink relies on.  The
     artifact is ≤ |suite| rows, so one file per run (like the reference's
     one JSON per run)."""
-    out = validation_results(df, suite, run_id).drop("run_id")
+    return _write_run(compile_results(suite)(df), base_path, run_id)
+
+
+def _write_run(artifact: DataFrame, base_path: str, run_id: str) -> str:
     path = f"{base_path}/run_id={run_id}"
-    out.coalesce(1).write.mode("overwrite").parquet(path)
+    artifact.coalesce(1).write.mode("overwrite").parquet(path)
     return path
 
 
@@ -225,13 +236,16 @@ def validation_results_sink(
     checkpoint_dir: str,
 ):
     """Streaming twin: one artifact partition per micro-batch via
-    foreachBatch.  foreachBatch is at-least-once; the per-batch partition
-    overwrite in :func:`save_validation_results` makes replays land on
-    the same ``run_id=batch_<id>`` directory, so the artifact table stays
-    exactly-once.  Returns a started StreamingQuery."""
+    foreachBatch.  The suite is compiled once, when the sink starts
+    (:func:`compile_results`); each micro-batch runs only ``apply`` and
+    the write.  foreachBatch is at-least-once; the per-batch partition
+    overwrite (as in :func:`save_validation_results`) makes replays land
+    on the same ``run_id=batch_<id>`` directory, so the artifact table
+    stays exactly-once.  Returns a started StreamingQuery."""
+    apply = compile_results(suite)
 
     def _write(batch: DataFrame, batch_id: int) -> None:
-        save_validation_results(batch, suite, base_path, f"batch_{batch_id:012d}")
+        _write_run(apply(batch), base_path, f"batch_{batch_id:012d}")
 
     return (
         df.writeStream.foreachBatch(_write)
@@ -243,32 +257,10 @@ def validation_results_sink(
 
 def suite_metrics(df: DataFrame, suite: list[Expectation]) -> DataFrame:
     """Per-expectation pass/fail counts for a batch — the engine-side
-    version of GE's validation result summary (validator.py:197-218),
-    computed in ONE aggregate pass (no per-rule scans)."""
-    # Materialize each predicate as a boolean column first: window-based
-    # expectations (unique) are not allowed inside aggregate functions.
-    flags = df.select(
-        *[compile_expectation(e).alias(f"p_{i}") for i, e in enumerate(suite)]
-    )
-    aggs = []
-    for i, _ in enumerate(suite):
-        p = F.col(f"p_{i}")
-        aggs.append(F.sum(F.when(p, 1).otherwise(0)).alias(f"pass_{i}"))
-        aggs.append(F.sum(F.when(~p, 1).otherwise(0)).alias(f"fail_{i}"))
-    wide = flags.agg(F.count("*").alias("total"), *aggs)
-    rows = []
-    for i, e in enumerate(suite):
-        rows.append(
-            F.struct(
-                F.lit(e.column).alias("column"),
-                F.lit(e.expectation_type).alias("expectation_type"),
-                F.col(f"pass_{i}").alias("n_pass"),
-                F.col(f"fail_{i}").alias("n_fail"),
-            )
-        )
-    return (
-        wide.select(F.explode(F.array(*rows)).alias("m"))
-        .select("m.*")
+    version of GE's validation result summary (validator.py:197-218):
+    the per-rule columns of :func:`compile_results`."""
+    return compile_results(suite)(df).select(
+        "column", "expectation_type", "n_pass", "n_fail"
     )
 
 

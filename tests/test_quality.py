@@ -134,35 +134,60 @@ def test_validation_results_artifact(spark, tmp_path):
     ) == ["run-x", "run-y"]
 
 
-def test_validation_results_streaming_sink(spark, tmp_path):
+def test_validation_results_streaming_sink(spark, tmp_path, py4j_calls):
     """Streaming twin: one artifact partition per micro-batch via
-    foreachBatch, exactly-once on the artifact table."""
+    foreachBatch, exactly-once on the artifact table, each batch's
+    artifact equal to the batch artifact over that file's rows.  The
+    suite is compiled once when the sink starts, so a micro-batch costs
+    tens of py4j round trips, not the thousands a per-batch rebuild
+    takes."""
     import json as _json
     import os
 
     d = str(tmp_path / "in")
     os.makedirs(d)
-    with open(os.path.join(d, "b0.json"), "w") as f:
-        for row in (GOOD, ("T2", None, "deposit", 10.0, "USD", "pending",
-                           "2024-01-01T00:00:00")):
-            f.write(_json.dumps(dict(zip(
-                ("transaction_id", "account_id", "transaction_type", "amount",
-                 "currency", "status", "timestamp"), row))) + "\n")
+    files = [
+        [GOOD, ("T2", None, "deposit", 10.0, "USD", "pending", "2024-01-01T00:00:00")],
+        [GOOD, GOOD, ("T3", "A3", "fee", -5.0, "XYZ", "lost", "not-a-date")],
+        [("T4", "A4", "refund", 2_000_000.0, "EUR", "failed", None)],
+    ]
+    paths = []
+    for i, rows in enumerate(files):
+        path = os.path.join(d, f"b{i}.json")
+        with open(path, "w") as f:
+            for row in rows:
+                f.write(_json.dumps(dict(zip(
+                    ("transaction_id", "account_id", "transaction_type", "amount",
+                     "currency", "status", "timestamp"), row))) + "\n")
+        os.utime(path, (1_700_000_000 + 10 * i,) * 2)  # batch i reads file i
+        paths.append(path)
 
-    stream = spark.readStream.schema(SCHEMA).json(d)
+    stream = spark.readStream.option("maxFilesPerTrigger", 1).schema(SCHEMA).json(d)
     base = str(tmp_path / "artifacts")
     q = quality.validation_results_sink(
         stream, TRANSACTION_SUITE, base, str(tmp_path / "ckpt")
     )
     try:
+        started = py4j_calls.n
         q.processAllAvailable()
+        per_batch = (py4j_calls.n - started) / len(files)
     finally:
         q.stop()
     back = spark.read.parquet(base)
-    assert back.count() == len(TRANSACTION_SUITE)
-    r = back.filter("column = 'account_id' AND expectation_type = 'not_null'").first()
+    assert back.count() == len(files) * len(TRANSACTION_SUITE)
+    r = back.filter(
+        "run_id = 'batch_000000000000' AND column = 'account_id' "
+        "AND expectation_type = 'not_null'"
+    ).first()
     assert (r.n_pass, r.n_fail, r.total, r.valid_rows) == (1, 1, 2, 1)
-    assert r.run_id.startswith("batch_")
+    for i, path in enumerate(paths):
+        got = spark.read.parquet(f"{base}/run_id=batch_{i:012d}")
+        want = quality.validation_results(
+            spark.read.schema(SCHEMA).json(path), TRANSACTION_SUITE, "x"
+        ).drop("run_id")
+        assert got.columns == want.columns
+        assert sorted(got.collect()) == sorted(want.collect()), i
+    assert per_batch < 300, per_batch
 
 
 def test_distribution_drift_identical_and_shifted(spark):
