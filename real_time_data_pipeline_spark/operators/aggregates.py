@@ -221,31 +221,16 @@ def kmv_distinct(
         portable_hash48,
     )
 
-    hashes = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(
-            F.col(group_col).alias(group_col),
-            portable_hash48(F.col(value_col)).alias("h"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy(group_col).orderBy("h")
-    kept = hashes.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
-    )
-    sk = kept.groupBy(group_col).agg(
-        F.max("rn").cast("bigint").alias("n_kept"),
-        F.max("h").cast("bigint").alias("kth_hash"),
+    hashes = df.filter(F.col(value_col).isNotNull()).select(
+        F.col(group_col).alias(group_col),
+        portable_hash48(F.col(value_col)).alias("h"),
     )
     exact = df.groupBy(group_col).agg(
         F.countDistinct(value_col).cast("bigint").alias("n_exact")
     )
-    est = F.when(
-        F.col("n_kept") < k, F.col("n_kept")
-    ).otherwise(F.expr(f"{(k - 1) * KMV_SPACE} div kth_hash"))
     return (
-        sk.join(exact, group_col)
-        .withColumn("est_kmv", est.cast("bigint"))
+        kmv_sketch(hashes, group_col, k)
+        .join(exact, group_col)
         .select(
             group_col,
             "n_exact",
@@ -257,6 +242,35 @@ def kmv_distinct(
             .alias("err_bp"),
         )
     )
+
+
+def _kmv_est(n_kept: str, kth: str, k: int) -> F.Column:
+    """KMV estimate: the seen count below k kept hashes, else
+    ``(k-1)·2^48 // h_k`` (exact integer)."""
+    return (
+        F.when(F.col(n_kept) < k, F.col(n_kept))
+        .otherwise(F.expr(f"{(k - 1) * KMV_SPACE} div {kth}"))
+        .cast("bigint")
+    )
+
+
+def kmv_sketch(hashes: DataFrame, group_col: str, k: int = KMV_K) -> DataFrame:
+    """The KMV step over (group, h) hash rows: keep the k smallest
+    DISTINCT hashes per group, then estimate.  Output: (group, hashes
+    — the kept hashes ascending, n_kept, kth_hash, est_kmv).  The kept
+    hashes are the mergeable summary: the sketch of a union is this
+    step over the union of the parts' kept hashes, for any split."""
+    w = Window.partitionBy(group_col).orderBy("h")
+    kept = (
+        hashes.distinct()
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+    )
+    return kept.groupBy(group_col).agg(
+        F.sort_array(F.collect_list("h")).alias("hashes"),
+        F.max("rn").cast("bigint").alias("n_kept"),
+        F.max("h").cast("bigint").alias("kth_hash"),
+    ).withColumn("est_kmv", _kmv_est("n_kept", "kth_hash", k))
 
 
 def kmv_merge(
@@ -327,13 +341,6 @@ def kmv_merge(
         F.countDistinct(value_col).cast("bigint").alias("n_exact")
     )
 
-    def _est(n_kept: str, kth: str) -> F.Column:
-        return (
-            F.when(F.col(n_kept) < k, F.col(n_kept))
-            .otherwise(F.expr(f"{(k - 1) * KMV_SPACE} div {kth}"))
-            .cast("bigint")
-        )
-
     return (
         direct.crossJoin(F.broadcast(merged))
         .crossJoin(F.broadcast(exact))
@@ -341,8 +348,8 @@ def kmv_merge(
             F.lit(k).cast("bigint").alias("k"),
             "n_exact",
             "kth_direct",
-            _est("n_kept_d", "kth_direct").alias("est_direct"),
-            _est("n_kept_m", "kth_merged").alias("est_merged"),
+            _kmv_est("n_kept_d", "kth_direct", k).alias("est_direct"),
+            _kmv_est("n_kept_m", "kth_merged", k).alias("est_merged"),
             (
                 (F.col("kth_direct") == F.col("kth_merged"))
                 & (F.col("n_kept_d") == F.col("n_kept_m"))
@@ -1420,7 +1427,8 @@ def _qdigest_build(hist: dict, level_bits: int, thr: int) -> dict:
     ``thr`` is pushed into its parent (internal nodes start at 0, and
     a push target is only ever created one level up from the level
     being processed, so the classic c(v)+c(sibling)+c(parent) < thr
-    test reduces to the children sum).  Pure integer arithmetic, fixed
+    test reduces to the children sum; ``thr`` 0, a histogram of fewer
+    than k rows, keeps every leaf).  Pure integer arithmetic, fixed
     processing order — identical in any engine."""
     cur = {(1 << level_bits) + c: int(n) for c, n in hist.items()}
     out: dict = {}
@@ -1468,10 +1476,13 @@ def _qdigest_compress(nodes: dict, level_bits: int, thr: int) -> dict:
 def _qdigest_walk_ledger(
     digest: dict, hist: dict, level_bits: int, thr: int, quantiles_bp: tuple
 ) -> list:
-    """(q_bp, est, target, rank_err, within_bound) rows for a digest
-    against the true histogram — the shared ledger arithmetic of the
-    one-shot and merge-certificate entries (same walk order, same rank
-    interval, same L·thr bound)."""
+    """One ledger row per quantile for a digest against the true
+    histogram — (q_bp, est, target, rank_lo, rank_hi, rank_err,
+    err_limit, within_bound, n_nodes), the ``qdigest_quantiles`` row —
+    shared by the one-shot, merge-certificate and streaming entries:
+    the canonical walk (range-hi asc, range-lo desc), est's exact rank
+    interval [rank_lo, rank_hi] in the true histogram (may be empty),
+    and the classic L·thr bound."""
     n = sum(hist.values())
 
     def node_range(idx: int) -> tuple:
@@ -1512,8 +1523,15 @@ def _qdigest_walk_ledger(
                 break
         r_lo, r_hi = ranks(est)
         rank_err = max(0, r_lo - 1 - target, target - r_hi)
-        out.append((q_bp, est, target, rank_err, rank_err <= err_limit))
+        out.append(
+            (q_bp, est, target, r_lo, r_hi, rank_err, err_limit,
+             rank_err <= err_limit, len(digest))
+        )
     return out
+
+
+def _qdigest_cents(value_col: str) -> F.Column:
+    return F.floor(F.col(value_col).cast("double") * F.lit(100)).cast("bigint")
 
 
 def qdigest_merge(
@@ -1546,11 +1564,10 @@ def qdigest_merge(
     hash aggregate; the collected frame is bounded by
     |groups| · 2^level_bits rows (groups is a tiny enum here), and
     everything after runs on digest dicts of ≤ ~3k nodes each."""
-    cents_col = F.floor(F.col(value_col).cast("double") * F.lit(100)).cast(
-        "bigint"
-    )
     rows = (
-        df.select(F.col(group_col).alias("grp"), cents_col.alias("cents"))
+        df.select(
+            F.col(group_col).alias("grp"), _qdigest_cents(value_col).alias("cents")
+        )
         .groupBy("grp", "cents")
         .agg(F.count("*").cast("bigint").alias("cnt"))
         .collect()  # bounded: <= |groups| * 2^level_bits rows
@@ -1574,19 +1591,11 @@ def qdigest_merge(
         for i, c in gd.items():
             merged_nodes[i] = merged_nodes.get(i, 0) + c
     merged = _qdigest_compress(merged_nodes, level_bits, thr)
-    oneshot = (
-        _qdigest_build(hist, level_bits, thr)
-        if thr >= 1
-        else {(1 << level_bits) + c: v for c, v in hist.items()}
-    )
+    oneshot = _qdigest_build(hist, level_bits, thr)
     lm = _qdigest_walk_ledger(merged, hist, level_bits, thr, quantiles_bp)
     lo = _qdigest_walk_ledger(oneshot, hist, level_bits, thr, quantiles_bp)
-    err_limit = level_bits * thr
     out = [
-        (
-            m[0], m[2], m[1], m[3], m[4], o[1], o[3], o[4],
-            err_limit, len(merged), len(by_grp),
-        )
+        (m[0], m[2], m[1], m[5], m[7], o[1], o[5], o[7], m[6], m[8], len(by_grp))
         for m, o in zip(lm, lo)
     ]
     return local_frame(
@@ -1634,82 +1643,41 @@ def qdigest_quantiles(
     recompress (ε-bound preserved; property-tested, not hash-pinned:
     a merged digest is a VALID digest but not structurally identical
     to the one-shot build)."""
-    cents_col = F.floor(F.col(value_col).cast("double") * F.lit(100)).cast(
-        "bigint"
+    return qdigest_from_histogram(
+        qdigest_histogram(df, value_col), k, level_bits, quantiles_bp
     )
-    hist_rows = (
-        df.select(cents_col.alias("cents"))
+
+
+def qdigest_histogram(df: DataFrame, value_col: str = "value") -> DataFrame:
+    """(cents, cnt) histogram of ``value_col`` on the q-digest's integer
+    cents universe — the one corpus-scale step of
+    :func:`qdigest_quantiles`, additive across any split of ``df``."""
+    return (
+        df.select(_qdigest_cents(value_col).alias("cents"))
         .groupBy("cents")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .collect()  # universe-bounded: <= 2^level_bits rows
     )
-    hist = {int(r["cents"]): int(r["cnt"]) for r in hist_rows}
-    assert all(0 <= c < (1 << level_bits) for c in hist), (
-        "value outside the configured q-digest universe"
-    )
-    n = sum(hist.values())
-    thr = n // k
-    digest = (
-        _qdigest_build(hist, level_bits, thr)
-        if thr >= 1
-        else {(1 << level_bits) + c: v for c, v in hist.items()}
-    )
-    # canonical walk: (range_hi asc, range_lo desc), accumulate counts
-    def node_range(idx: int) -> tuple:
-        lvl = idx.bit_length() - 1
-        span = 1 << (level_bits - lvl)
-        lo = (idx - (1 << lvl)) * span
-        return lo, lo + span - 1
 
-    walk = sorted(
-        ((node_range(i)[1], -node_range(i)[0], c) for i, c in digest.items())
-    )
-    cum_before = {}
-    cents_sorted = sorted(hist)
-    run = 0
-    for c in cents_sorted:
-        cum_before[c] = run
-        run += hist[c]
 
-    def ranks(v: int) -> tuple:
-        lo = 0
-        for c in cents_sorted:
-            if c < v:
-                lo = cum_before[c] + hist[c]
-            else:
-                break
-        hi = lo + hist.get(v, 0)
-        return lo + 1, hi  # occupied rank interval (may be empty)
-
-    err_limit = level_bits * thr
-    rows = []
-    for q_bp in quantiles_bp:
-        target = (q_bp * n + 9999) // 10000
-        cum = 0
-        est = (1 << level_bits) - 1
-        for hi, neg_lo, c in walk:
-            cum += c
-            if cum >= target:
-                est = hi
-                break
-        r_lo, r_hi = ranks(est)
-        rank_err = max(0, r_lo - 1 - target, target - r_hi)
-        rows.append(
-            (
-                q_bp,
-                est,
-                target,
-                r_lo,
-                r_hi,
-                rank_err,
-                err_limit,
-                rank_err <= err_limit,
-                len(digest),
-            )
-        )
+def qdigest_from_histogram(
+    hist_df: DataFrame,
+    k: int = QD_K,
+    level_bits: int = QD_L,
+    quantiles_bp: tuple = (2500, 5000, 7500, 9000, 9900),
+) -> DataFrame:
+    """The :func:`qdigest_quantiles` digest and rank ledger from a
+    (cents, cnt) histogram frame with one row per cents value."""
+    hist = {
+        int(r["cents"]): int(r["cnt"])
+        for r in hist_df.collect()  # universe-bounded: <= 2^level_bits rows
+    }
+    if not all(0 <= c < (1 << level_bits) for c in hist):
+        raise ValueError("value outside the configured q-digest universe")
+    thr = sum(hist.values()) // k
+    digest = _qdigest_build(hist, level_bits, thr)
     return local_frame(
-        df.sparkSession,
-        rows,
+        hist_df.sparkSession,
+        _qdigest_walk_ledger(digest, hist, level_bits, thr, quantiles_bp),
         "q_bp bigint, est_cents bigint, target_rank bigint, "
         "rank_lo bigint, rank_hi bigint, rank_err bigint, "
         "err_limit bigint, within_bound boolean, n_nodes bigint",

@@ -997,8 +997,8 @@ def curation_flags(
     n-gram histogram, decontamination joins a STATIC broadcast benchmark
     gram set — so the pass has no cross-document state and runs
     identically in batch and per-micro-batch streaming
-    (streaming/pipeline.curation_foreach_batch is the incremental twin;
-    batch/stream parity is pinned by test).  The join is co-partitioned:
+    (queries/curation.stream_curation_flags runs it per micro-batch;
+    batch/stream parity is pinned by test and by the shared oracle).  The join is co-partitioned:
     both sides arrive hash-partitioned by ``id_col`` from their final
     aggregates."""
     rep = repetition_stats(df, id_col, text_col)

@@ -48,8 +48,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -58,9 +56,7 @@ from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 
 # PageRank eager-checkpoint cadence (iterations per checkpoint).
 # Results are cadence-independent (integer fixpoint); see pagerank().
-PR_CHECKPOINT_EVERY = max(
-    1, int(os.environ.get("SPARK_GRAFT_PR_CHECKPOINT_EVERY", "2"))
-)
+PR_CHECKPOINT_EVERY = 2
 
 __all__ = [
     "connected_components",
@@ -349,12 +345,9 @@ def pagerank(
         # one agg per iteration) re-analyzes in ms and re-computes from
         # the previous checkpoint on failure, so the cadence trades
         # nothing structural.  Values are integer arithmetic: checkpoint
-        # cadence cannot change them.  Default stays at 2 — the r11
-        # cadence experiment (OPTIMIZATION_r11.md: 1 vs 2 vs 3 measured
-        # same-window at sf0.1) confirmed 2 as the plateau; the env knob
-        # ($SPARK_GRAFT_PR_CHECKPOINT_EVERY) exists because the right
-        # cadence grows with cluster recompute cost, not with this
-        # sandbox.
+        # cadence cannot change them.  2 is measured: the r11 cadence
+        # experiment (OPTIMIZATION_r11.md: 1 vs 2 vs 3 same-window at
+        # sf0.1) found it the plateau.
         if i % PR_CHECKPOINT_EVERY == PR_CHECKPOINT_EVERY - 1 or i == iters - 1:
             ranks = chk(ranks)
             # The new eager checkpoint supersedes the previous one —

@@ -17,7 +17,6 @@ Scale discipline (the repo-wide rules):
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -108,7 +107,9 @@ def co_occurrence_lift(
     )
 
 
-RANK_PARTITIONS = int(os.environ.get("SPARK_GRAFT_RANK_PARTITIONS", "32"))
+# Range partitions of distributed_ranks; ranks are partitioning-
+# independent by construction.
+RANK_PARTITIONS = 32
 
 
 def _ranks_pair(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -183,10 +184,9 @@ def distributed_ranks(df: DataFrame) -> DataFrame:
     sort, in-partition row numbers from the persisted frame's
     monotonic ids, partition-count offsets folded by a broadcast
     triangular join — no single-partition window and (since r11) no
-    second full-data exchange at any scale.  ``RANK_PARTITIONS``
-    (env $SPARK_GRAFT_RANK_PARTITIONS, default 32) sizes the range
-    partitioning; ranks are partitioning-independent by construction,
-    so production sizes it to data volume without changing results."""
+    second full-data exchange at any scale.  ``RANK_PARTITIONS`` (32)
+    sizes the range partitioning; ranks are partitioning-independent by
+    construction, so sizing it to data volume changes no result."""
     return _ranks_pair(df)[0]
 
 

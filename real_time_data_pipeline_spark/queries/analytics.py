@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.functions.stable import sum_money_sql
+from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 from real_time_data_pipeline_spark.queries.reference_parity import EVENT_TYPES
 from real_time_data_pipeline_spark.schemas import load_table
 
@@ -1606,18 +1607,13 @@ QUERIES["distribution_drift"] = q_distribution_drift
 def q_stream_distribution_drift(spark, sf_dir):
     """Streaming drift monitoring on the SAME oracle as
     `distribution_drift`: the reference window is a frozen batch frame,
-    the current window ARRIVES AS A STREAM, and each micro-batch folds
-    its (group, bin) and novel-group partials into bounded state
-    (|groups × bins| rows — the operators/quality mergeable
-    decomposition), so the monitor never re-reads the current window.
-    Finalize over the merged state is hash-identical to the batch
-    answer — the fourth streaming-engine entry sharing a batch oracle.
-
-    State is materialized between batches as Arrow-backed pandas
-    (groups × bins ≈ dozens of rows; the production shape upserts the
-    same partials into a monitoring table instead)."""
-    import pandas as pd
-
+    the current window ARRIVES AS A STREAM, and each micro-batch's
+    (group, bin) and novel-group partials — the operators/quality
+    mergeable decomposition — go to captured parquet, so the monitor
+    never re-reads the current window.  One engine merge (sum of the
+    counts) over the captured partials feeds the finalize, which is
+    hash-identical to the batch answer.  Novel-group partials are the
+    captured rows with a NULL bin (a binned row always has a bin)."""
     from real_time_data_pipeline_spark.operators.quality import (
         drift_bin_counts,
         drift_bounds,
@@ -1626,7 +1622,7 @@ def q_stream_distribution_drift(spark, sf_dir):
     )
     from real_time_data_pipeline_spark.queries.reference_parity import (
         _stream_events,
-        stream_state_scope,
+        stream_capture,
     )
 
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
@@ -1636,62 +1632,36 @@ def q_stream_distribution_drift(spark, sf_dir):
         .select("event_type", "ts", "value")
     )
     ref = ev.filter(F.col("ts") < cutoff)
-    bounds = drift_bounds(ref, "event_type", "value")
     # Freeze the tiny per-group bounds as a LocalRelation so every
     # micro-batch reuses them without re-aggregating the reference.
-    bounds = spark.createDataFrame(
-        bounds.toPandas(), "event_type string, _mn double, _mx double"
+    bounds = local_frame(
+        spark,
+        drift_bounds(ref, "event_type", "value").collect(),
+        "event_type string, _mn double, _mx double",
     )
     ref_binned = drift_bin_counts(ref, bounds, "event_type", "value", 10)
 
-    state = {
-        "binned": pd.DataFrame(columns=["event_type", "bin", "n"]),
-        "novel": pd.DataFrame(columns=["event_type", "n"]),
-    }
-
-    def fold(batch, _i):
+    def partials(batch):
         b = batch.filter(
             (F.col("ts") >= cutoff) & F.col("value").isNotNull()
         ).select("event_type", "ts", "value")
-        inc_binned = drift_bin_counts(
-            b, bounds, "event_type", "value", 10
-        ).toPandas()
-        inc_novel = drift_novel_counts(b, bounds, "event_type").toPandas()
-        state["binned"] = (
-            pd.concat([state["binned"], inc_binned])
-            .groupby(["event_type", "bin"], as_index=False)["n"]
-            .sum()
-        )
-        state["novel"] = (
-            pd.concat([state["novel"], inc_novel])
-            .groupby(["event_type"], as_index=False)["n"]
-            .sum()
+        return drift_bin_counts(b, bounds, "event_type", "value", 10).union(
+            drift_novel_counts(b, bounds, "event_type").select(
+                "event_type", F.lit(None).cast("bigint").alias("bin"), "n"
+            )
         )
 
-    with stream_state_scope(spark):
-        q = (
-            _stream_events(spark, sf_dir)
-            .select("event_type", "ts", "value")
-            .writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # Finalizing over PARTIAL state while foreachBatch still
-            # mutates it would hand a nondeterministic, silently-wrong
-            # result to the oracle; stop the straggler and fail loudly
-            # instead.
-            q.stop()
-            raise TimeoutError(
-                "stream_distribution_drift: availableNow stream did not "
-                "finish within 300s; refusing to finalize partial state"
-            )
-    cur_binned = spark.createDataFrame(
-        state["binned"], "event_type string, bin bigint, n long"
+    cap = stream_capture(
+        _stream_events(spark, sf_dir).select("event_type", "ts", "value"),
+        "stream_distribution_drift",
+        transform=partials,
+        schema="event_type string, bin bigint, n bigint",
     )
-    novel = spark.createDataFrame(
-        state["novel"], "event_type string, n long"
-    )
+    n = F.sum("n").cast("bigint").alias("n")
+    cur_binned = cap.filter(F.col("bin").isNotNull()).groupBy(
+        "event_type", "bin"
+    ).agg(n)
+    novel = cap.filter(F.col("bin").isNull()).groupBy("event_type").agg(n)
     return drift_finalize(ref_binned, cur_binned, novel, "event_type")
 
 
@@ -1789,18 +1759,17 @@ QUERIES["category_drift"] = q_category_drift
 def q_stream_category_drift(spark, sf_dir):
     """Streaming twin of `category_drift` on the same oracle: the
     current window's per-category counts are additive, so each
-    micro-batch folds into |categories|-row state and the finalize over
-    merged counts is hash-identical to the batch answer (same
-    mergeable-partial pattern as stream_distribution_drift)."""
-    import pandas as pd
-
+    micro-batch's counts go to captured parquet and one engine merge
+    (sum per category) feeds the finalize, hash-identical to the batch
+    answer (same mergeable-partial pattern as
+    stream_distribution_drift)."""
     from real_time_data_pipeline_spark.operators.quality import (
         categorical_counts,
         categorical_drift_finalize,
     )
     from real_time_data_pipeline_spark.queries.reference_parity import (
         _stream_events,
-        stream_state_scope,
+        stream_capture,
     )
 
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
@@ -1809,35 +1778,17 @@ def q_stream_category_drift(spark, sf_dir):
         ev.filter(F.col("ts") < cutoff), "event_type"
     ).withColumnRenamed("n", "n_ref")
 
-    state = {"counts": pd.DataFrame(columns=["cat", "n"])}
-
-    def fold(batch, _i):
-        inc = categorical_counts(
-            batch.filter(F.col("ts") >= cutoff), "event_type"
-        ).toPandas()
-        state["counts"] = (
-            pd.concat([state["counts"], inc])
-            .groupby(["cat"], as_index=False)["n"]
-            .sum()
-        )
-
-    with stream_state_scope(spark):
-        q = (
-            _stream_events(spark, sf_dir)
-            .select("event_type", "ts")
-            .writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_category_drift: availableNow stream did not "
-                "finish within 300s; refusing to finalize partial state"
-            )
-    cur_counts = spark.createDataFrame(
-        state["counts"], "cat string, n long"
-    ).withColumnRenamed("n", "n_cur")
+    cap = stream_capture(
+        _stream_events(spark, sf_dir).select("event_type", "ts"),
+        "stream_category_drift",
+        transform=lambda b: categorical_counts(
+            b.filter(F.col("ts") >= cutoff), "event_type"
+        ),
+        schema="cat string, n bigint",
+    )
+    cur_counts = cap.groupBy("cat").agg(
+        F.sum("n").cast("bigint").alias("n_cur")
+    )
     return categorical_drift_finalize(ref_counts, cur_counts)
 
 
@@ -2167,15 +2118,13 @@ def q_stream_cdc_apply(spark, sf_dir):
     State is one row per key between batches (|users| rows), held as an
     engine-side checkpoint (reference_parity.swap_state); the seed
     stays lazy and is computed inside the first batch's checkpoint."""
-    from real_time_data_pipeline_spark.operators import cache
     from real_time_data_pipeline_spark.operators.cdc import (
         latest_state,
         merge_snapshot_state,
     )
     from real_time_data_pipeline_spark.queries.reference_parity import (
         _stream_events,
-        await_streaming,
-        stream_state_scope,
+        drain,
         swap_state,
     )
 
@@ -2197,15 +2146,13 @@ def q_stream_cdc_apply(spark, sf_dir):
             ),
         )
 
-    with stream_state_scope(spark):
-        q = (
-            _stream_events(spark, sf_dir)
-            .select("user_id", "event_id", "ts", "event_type", "value")
-            .writeStream.foreachBatch(cache.bind_scope(fold))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_cdc_apply")
+    drain(
+        _stream_events(spark, sf_dir).select(
+            "user_id", "event_id", "ts", "event_type", "value"
+        ),
+        "stream_cdc_apply",
+        fold,
+    )
     return _cdc_present(holder["state"])
 
 

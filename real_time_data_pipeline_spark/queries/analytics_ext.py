@@ -568,15 +568,13 @@ def q_stream_ohlc(spark, sf_dir):
     ``ohlc_bars`` oracle pins.  State is one row per bar between batches
     (|types × days| — bounded), held as an engine-side checkpoint
     (reference_parity.swap_state)."""
-    from real_time_data_pipeline_spark.operators import cache
     from real_time_data_pipeline_spark.operators.aggregates import (
         merge_ohlc_state,
         ohlc_state,
     )
     from real_time_data_pipeline_spark.queries.reference_parity import (
         _stream_events,
-        await_streaming,
-        stream_state_scope,
+        drain,
         swap_state,
     )
 
@@ -615,15 +613,13 @@ def q_stream_ohlc(spark, sf_dir):
             holder, merge_ohlc_state(holder["state"], inc, ["event_type", "day"])
         )
 
-    with stream_state_scope(spark):
-        q = (
-            _stream_events(spark, sf_dir)
-            .select("event_type", "ts", "event_id", "value")
-            .writeStream.foreachBatch(cache.bind_scope(fold))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_ohlc")
+    drain(
+        _stream_events(spark, sf_dir).select(
+            "event_type", "ts", "event_id", "value"
+        ),
+        "stream_ohlc",
+        fold,
+    )
     state = holder["state"]
     return state.select(
         "event_type",
@@ -818,27 +814,20 @@ ORACLES["wasserstein_drift"] = f"""
 def q_stream_wasserstein_drift(spark, sf_dir):
     """Streaming W₁ drift on the SAME oracle as `wasserstein_drift`:
     the reference window's bin histogram is frozen once, the current
-    window ARRIVES AS A STREAM, and each micro-batch adds its (group,
-    bin) counts into the state — bin counts are plainly additive, so
-    the fold is a concat+groupby-sum over |groups × occupied bins|
-    rows.  The CDF cross-multiplication runs once, over the final
-    merged histogram, and is hash-identical to the batch answer.
-
-    State is Arrow-backed pandas between batches (a few hundred rows;
-    production upserts the same partials into a monitoring table)."""
-    import pandas as pd
-
+    window ARRIVES AS A STREAM, and each micro-batch's (group, bin)
+    counts go to captured parquet — bin counts are plainly additive, so
+    one engine merge (sum per (group, bin)) over the capture is the
+    current histogram.  The CDF cross-multiplication runs once, over
+    the merged histogram, and is hash-identical to the batch answer."""
     from real_time_data_pipeline_spark.queries.reference_parity import (
         _stream_events,
-        await_streaming,
-        stream_state_scope,
+        stream_capture,
     )
 
     cutoff = F.lit(_SPLIT_CUTOFF).cast("timestamp")
-    state = {"cur": pd.DataFrame(columns=["g", "bin", "n"])}
 
-    def fold(batch, _i):
-        inc = (
+    def partials(batch):
+        return (
             batch.filter(
                 (F.col("value").isNotNull()) & (F.col("ts") >= cutoff)
             )
@@ -847,22 +836,14 @@ def q_stream_wasserstein_drift(spark, sf_dir):
                 F.expr(f"({_CENTS}) div 1000").alias("bin"),
             )
             .agg(F.count("*").cast("bigint").alias("n"))
-            .toPandas()
-        )
-        merged = pd.concat([state["cur"], inc], ignore_index=True)
-        state["cur"] = (
-            merged.groupby(["g", "bin"], as_index=False)["n"].sum()
         )
 
-    with stream_state_scope(spark):
-        q = (
-            _stream_events(spark, sf_dir)
-            .select("event_type", "ts", "value")
-            .writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_wasserstein_drift")
+    cap = stream_capture(
+        _stream_events(spark, sf_dir).select("event_type", "ts", "value"),
+        "stream_wasserstein_drift",
+        transform=partials,
+        schema="g string, bin bigint, n bigint",
+    )
 
     from real_time_data_pipeline_spark.operators.quality import (
         wasserstein_from_binned,
@@ -880,9 +861,9 @@ def q_stream_wasserstein_drift(spark, sf_dir):
         )
         .agg(F.count("*").cast("bigint").alias("nr"))
     )
-    cur_binned = spark.createDataFrame(
-        state["cur"], "g string, bin long, n long"
-    ).select("g", "bin", F.col("n").alias("nc"))
+    cur_binned = cap.groupBy("g", "bin").agg(
+        F.sum("n").cast("bigint").alias("nc")
+    )
     binned = (
         ref_binned.join(cur_binned, ["g", "bin"], "full_outer")
         .select(
@@ -1913,10 +1894,8 @@ def q_stream_join_view_incremental(spark, sf_dir):
     bounded — held as an engine-side checkpoint
     (reference_parity.swap_state); the seed stays lazy and is computed
     inside the first batch's checkpoint."""
-    from real_time_data_pipeline_spark.operators import cache
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        await_streaming,
-        stream_state_scope,
+        drain,
         swap_state,
     )
 
@@ -1957,15 +1936,11 @@ def q_stream_join_view_incremental(spark, sf_dir):
         )
 
     schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    with stream_state_scope(spark):
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(f"{sf_dir}/orders*.parquet")
-            .writeStream.foreachBatch(cache.bind_scope(fold))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_join_view_incremental")
+    drain(
+        spark.readStream.schema(schema).parquet(f"{sf_dir}/orders*.parquet"),
+        "stream_join_view_incremental",
+        fold,
+    )
     return holder["state"]
 
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import curation
-from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 from real_time_data_pipeline_spark.queries.dedup import DUCK_TOKENS
 from real_time_data_pipeline_spark.queries.text import _stop_list
 from real_time_data_pipeline_spark.schemas import load_table
@@ -461,8 +460,8 @@ def q_snapshot_delta_profile(spark, sf_dir):
 def q_stream_curation_flags(spark, sf_dir):
     """Streaming twin of `curation_flags` on the SAME oracle: documents
     ARRIVE AS A STREAM and every micro-batch runs the combined curation
-    verdict via streaming/pipeline.curation_foreach_batch against the
-    static benchmark frame — the steady-state ingest-curation shape.
+    verdict (operators/curation.curation_flags) against the static
+    benchmark frame — the steady-state ingest-curation shape.
     Neither signal holds cross-document state (repetition is
     doc-bounded, decontamination joins the static benchmark gram set),
     so per-batch outputs are disjoint by doc id and their union is
@@ -471,12 +470,7 @@ def q_stream_curation_flags(spark, sf_dir):
     pair; this entry puts the full readStream→foreachBatch cycle under
     the driver gate)."""
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        await_streaming,
-        capture_stage,
-        stream_state_scope,
-    )
-    from real_time_data_pipeline_spark.streaming.pipeline import (
-        curation_foreach_batch,
+        stream_capture,
     )
 
     docs = _docs(spark, sf_dir)
@@ -487,24 +481,12 @@ def q_stream_curation_flags(spark, sf_dir):
     stream = spark.readStream.schema(schema).parquet(
         f"{sf_dir}/documents*.parquet"
     )
-    # r11: the sink appends each batch's verdicts to a parquet capture
-    # dir instead of collecting rows through the driver (guide §5; same
-    # rows, JVM-side — see reference_parity.stream_capture).
-    stage = capture_stage(spark, "stream_curation_flags")
-
-    def sink(flags, _batch_id):
-        flags.write.mode("append").parquet(stage)
-
-    with stream_state_scope(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                curation_foreach_batch(bench, sink)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_curation_flags")
-    return spark.read.schema(out_schema).parquet(stage)
+    return stream_capture(
+        stream,
+        "stream_curation_flags",
+        transform=lambda b: curation.curation_flags(b, bench),
+        schema=out_schema,
+    )
 
 
 CALIBRATION_WINDOWS = 4
@@ -632,28 +614,19 @@ def q_stream_calibration_drift(spark, sf_dir):
     stream arrives in micro-batches (staged as 4 window-range files;
     scoring/binning happens upstream at the edge against the FROZEN
     reference artifacts, the monitor never retrains them), and each
-    micro-batch folds its per-(window, decile) counts into held
-    partials — counts are associative, so ANY batch split yields the
-    identical final table, which is the property the shared oracle
-    hash pins.  State between batches is windows × deciles counter
-    rows (bounded), merged driver-side the way the CDC twin holds its
-    snapshot."""
-    import os
-
+    micro-batch's per-(window, decile) counts go to captured parquet
+    — counts are associative, so one engine merge (sum per (window,
+    decile)) over the capture yields the identical final table for ANY
+    batch split, which is the property the shared oracle hash pins.
+    Each capture holds windows × deciles counter rows per batch
+    (bounded)."""
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        await_streaming,
-        stream_state_scope,
+        capture_stage,
+        stream_capture,
     )
 
     binned, ref = _calibration_binned(spark, sf_dir)
-    ref_rows = {r["decile"]: r["ref_model_keep_bp"] for r in ref.collect()}
-    stage = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        "spark-warehouse",
-        f"stream_calib_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    stage = capture_stage(spark, "stream_calib")
     (
         binned.repartitionByRange(CALIBRATION_WINDOWS, "window_id", "doc_id")
         .write.mode("overwrite")
@@ -666,42 +639,20 @@ def q_stream_calibration_drift(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    partials: dict = {}
-
-    def fold(batch, _i):
-        for r in _calibration_window_agg(batch).collect():
-            key = (r["window_id"], r["decile"])
-            cur = partials.get(key, (0, 0, 0, 0))
-            partials[key] = (
-                cur[0] + r["n_docs"],
-                cur[1] + r["n_model_keep"],
-                cur[2] + r["n_heuristic_keep"],
-                cur[3] + r["n_agree"],
-            )
-
-    with stream_state_scope(spark):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_calibration_drift")
-    rows = [
-        (w, d, n, nm, nh, na)
-        for (w, d), (n, nm, nh, na) in partials.items()
-    ]
-    per = local_frame(
-        spark,
-        rows,
-        "window_id bigint, decile bigint, n_docs bigint, "
+    cap = stream_capture(
+        stream,
+        "stream_calibration_drift",
+        transform=_calibration_window_agg,
+        schema="window_id bigint, decile bigint, n_docs bigint, "
         "n_model_keep bigint, n_heuristic_keep bigint, n_agree bigint",
     )
-    ref_df = local_frame(
-        spark,
-        [(d, bp) for d, bp in ref_rows.items()],
-        "decile bigint, ref_model_keep_bp bigint",
+    per = cap.groupBy("window_id", "decile").agg(
+        *[
+            F.sum(c).cast("bigint").alias(c)
+            for c in ("n_docs", "n_model_keep", "n_heuristic_keep", "n_agree")
+        ]
     )
-    return _calibration_present(per, ref_df)
+    return _calibration_present(per, ref)
 
 
 BUDGET_TOKENS = 1_000_000

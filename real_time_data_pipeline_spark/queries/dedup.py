@@ -211,17 +211,15 @@ def q_stream_dedup_incremental(spark, sf_dir):
     micro-batch results is hash-identical to the one-shot batch probe —
     checked against the SAME exact corpus×increment Jaccard oracle as
     `dedup_incremental`."""
-    import os
-
     from real_time_data_pipeline_spark.operators import cache
+    from real_time_data_pipeline_spark.queries.reference_parity import (
+        capture_stage,
+        stream_capture,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"minhash_index_stream_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = capture_stage(spark, "minhash_index_stream")
     dedup.build_minhash_index(corpus, path, num_perm=128, bands=32)
     # Schema of the probe output, resolved lazily (no action) from a
     # zero-row probe so the streaming capture frame matches exactly.
@@ -237,37 +235,17 @@ def q_stream_dedup_incremental(spark, sf_dir):
         .parquet(f"{sf_dir}/documents*.parquet")
         .filter(F.col("doc_id") % 10 == 0)
     )
-    from real_time_data_pipeline_spark.queries.reference_parity import (
-        await_streaming,
-        capture_stage,
-        stream_state_scope,
+    # the probe's per-batch persist is freed by stream_capture's
+    # per-batch scope before the next micro-batch
+    return stream_capture(
+        stream,
+        "stream_dedup_incremental",
+        transform=lambda b: dedup.incremental_minhash_pairs(
+            spark, b, corpus, path,
+            num_perm=128, bands=32, verify_threshold=0.8,
+        ),
+        schema=out_schema,
     )
-
-    # r11: per-batch probe output appends to the parquet capture sink
-    # instead of collecting rows through the driver (see
-    # reference_parity.stream_capture; inlined here because the probe
-    # must release its tracked per-batch persist after each write).
-    stage = capture_stage(spark, "stream_dedup_incremental")
-
-    def probe(batch, _i):
-        # the probe tracks a per-batch persist; its scope frees it before
-        # the next micro-batch so a long-running stream holds no stale
-        # cache, and leaves frames this query did not create alone
-        with cache.scoped():
-            out = dedup.incremental_minhash_pairs(
-                spark, batch, corpus, path,
-                num_perm=128, bands=32, verify_threshold=0.8,
-            )
-            out.write.mode("append").parquet(stage)
-
-    with stream_state_scope(spark):
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_dedup_incremental")
-    return spark.read.schema(out_schema).parquet(stage)
 
 
 def q_source_dup_matrix(spark, sf_dir):

@@ -9,7 +9,6 @@ event_type≈transaction_type.  Every query here has a DuckDB oracle.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -288,15 +287,11 @@ def q_stream_rollup_incremental(spark, sf_dir):
             ),
         )
 
-    with stream_state_scope(spark):
-        q = (
-            _stream_events(spark, sf_dir)
-            .select("user_id", "ts", "value")
-            .writeStream.foreachBatch(cache.bind_scope(fold))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "streaming query")
+    drain(
+        _stream_events(spark, sf_dir).select("user_id", "ts", "value"),
+        "stream_rollup_incremental",
+        fold,
+    )
     return holder["state"].select(
         "year",
         "month",
@@ -739,23 +734,14 @@ def q_stream_windowed_agg(spark, sf_dir):
     execution itself under the driver's value-hash gate: batch/stream
     parity is not just a pytest claim, it is oracle-checked.
 
-    Mechanics: the schema comes from a batch read (events.ts surfaces
-    as int64 nanos under the legacy conf — see schemas.load_table),
-    the stream converts nanos→micros identically, and complete mode +
-    availableNow folds ALL input into one final emission, which
-    foreachBatch captures (bounded: one row per (hour, user))."""
+    Mechanics: the stream is :func:`_stream_events` (the batch read's
+    schema, ts converted nanos→micros as schemas.load_table does), and
+    complete mode + availableNow folds ALL input into one final
+    emission, which foreachBatch captures (bounded: one row per (hour,
+    user))."""
     from real_time_data_pipeline_spark.functions import stable
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    # FileStreamSource requires a directory or a GLOB; the testdata
-    # table is a single file, so feed it as a glob pattern
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events*.parquet")
-    if dict((f.name, f.dataType.simpleString()) for f in schema.fields).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
+    stream = _stream_events(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("window"), "user_id")
         .agg(
@@ -875,78 +861,65 @@ def _stream_events(spark, sf_dir):
     return stream
 
 
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+# State-store instances per stateful operator (spark.sql.shuffle.partitions
+# at stream start).  The registry streams carry KB-scale bounded state,
+# where the batch shuffle width is pure per-micro-batch overhead (each
+# instance pays commit/maintenance file I/O every batch): measured on
+# stream_range_join at sf0.1, 32 -> 8 took the run from 39.9 s to 9.7 s,
+# output row-identical.  A constant, not derived from the core count, so
+# runs at different core counts keep identical stream plans.
+STREAM_STATE_PARTITIONS = 8
 
 
-@contextmanager
-def stream_state_scope(spark, partitions: int | None = None):
-    """Run a streaming query with a state-partition count sized to its
-    STATE, not to the batch shuffle width (r10 optimization, guide
-    §2.2/§1.2: fixed cost per micro-batch scales with the number of
-    state-store instances = shuffle partitions at stream start × stores
-    per stateful operator — each instance pays commit/maintenance file
-    I/O every batch regardless of data volume).
+def drain(
+    sdf,
+    name: str,
+    on_batch,
+    output_mode: str = "append",
+    partitions: int | None = None,
+) -> None:
+    """Start ``sdf`` as an availableNow query that hands each micro-batch
+    to ``on_batch(batch, batch_id)``, and return once every available
+    input has been processed — the one place a registry stream is
+    started and awaited.
 
-    The bench streams carry KB-scale bounded state, where 32 partitions
-    are pure overhead: measured on stream_range_join at sf0.1, the
-    stream run drops 39.9 s → 9.7 s (batch-0 addBatch 22.3 → 4.5 s, the
-    zero-row watermark-finalization batch 12.9 → 2.3 s) with output
-    row-identical.  Partitioning never changes WHAT a stateful operator
-    computes — keys still hash to exactly one partition; per-key fold
-    order is enforced by the operators' explicit sorts — so results are
-    unchanged (oracle parity re-verified per stream query).
+    ``on_batch`` runs on a ``foreachBatch`` callback thread; it is
+    wrapped in ``cache.bind_scope``, so frames it registers land in the
+    caller's scope.  The stream runs with ``partitions`` state
+    partitions (default :data:`STREAM_STATE_PARTITIONS`); partitioning
+    never changes what a stateful operator computes, since a key hashes
+    to exactly one partition.  The one caller with its own count is the
+    ``applyInPandasWithState`` fold (stream_clamped_balance), whose
+    per-batch cost is Python-worker CPU over every active key, so it
+    runs at the batch shuffle width.  The count is set on the session's
+    ``spark.sql.shuffle.partitions`` for the start and restored after,
+    so batch queries in the session keep their width; this assumes a
+    single-threaded driver (two concurrent drains on one session would
+    race on the conf).
 
-    Production sizing: state partitions should grow with state volume
-    (hundreds for TB-scale state), set via
-    $SPARK_GRAFT_STREAM_STATE_PARTITIONS; the default 8 is a
-    deliberately CONSTANT local floor (not derived from the core count)
-    so bench runs at different $SPARK_GRAFT_CPUS keep identical stream
-    plans and stay comparable.  The conf is restored on exit, so batch
-    queries in the same session keep the session's shuffle width.
-
-    ``partitions`` is the per-query override (r11, VERDICT r10 item 2):
-    streams whose per-batch cost is PYTHON-WORKER CPU over the state —
-    ``applyInPandasWithState`` folds, where every key's rows are handed
-    to a Python worker each batch — need the partition count sized to
-    CORES, not to state-store commit overhead: the r10 constant-8 floor
-    cut that one stream family's per-batch parallelism 4x (the
-    stream_clamped_balance regression, +30-42% in both of the judge's
-    windows).  Callers with a Python-stateful fold pass the session's
-    batch shuffle width (see q_stream_clamped_balance); everything else
-    keeps the state-sized default.
-
-    Thread-safety note (ADVICE r10): this mutates the SESSION-global
-    ``spark.sql.shuffle.partitions`` — it assumes the single-threaded
-    driver the bench/parity harnesses use.  A multi-threaded driver
-    running concurrent batch queries should give each stream its own
-    ``spark.newSession()`` so the override cannot leak across threads,
-    and must not nest two scopes on one session (the second restore
-    would reinstate the first scope's override).
-    """
+    A stream that does not finish within 300 s is stopped and raises:
+    finalizing over state a callback is still writing would return a
+    partial answer."""
+    spark = sdf.sparkSession
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    n = STREAM_STATE_PARTITIONS if partitions is None else int(partitions)
+    n = STREAM_STATE_PARTITIONS if partitions is None else partitions
     spark.conf.set(key, str(n))
     try:
-        yield
+        q = (
+            sdf.writeStream.foreachBatch(cache.bind_scope(on_batch))
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(
+                f"{name}: availableNow stream did not finish within 300s;"
+                " refusing to finalize partial state"
+            )
     finally:
         spark.conf.set(key, old)
-
-
-def await_streaming(q, name: str, timeout_s: int = 300) -> None:
-    """availableNow streams must COMPLETE before their driver-side state
-    is finalized: awaitTermination returning False means foreachBatch is
-    still mutating the captured state from the streaming thread, and
-    finalizing over it would be nondeterministically wrong.  Stop the
-    straggler and fail loudly instead."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"{name}: availableNow stream did not finish within "
-            f"{timeout_s}s; refusing to finalize partial state"
-        )
 
 
 def swap_state(holder: dict, merged: DataFrame) -> None:
@@ -957,7 +930,7 @@ def swap_state(holder: dict, merged: DataFrame) -> None:
     and every batch's plan starts from one checkpoint scan, so lineage
     never grows with the batch count.  The final state stays registered
     until the caller's release (``cache.release_all`` / ``scoped``);
-    wrap the fold in ``cache.bind_scope`` so a caller's scope sees it."""
+    :func:`drain` binds the fold to the caller's scope."""
     old = holder["state"]
     holder["state"] = cache.checkpoint(merged)
     cache.release(old)
@@ -967,9 +940,9 @@ _CAPTURE_APPS: set[str] = set()
 
 
 def capture_stage(spark, name: str) -> str:
-    """Fresh parquet capture dir for one stream run, under the repo's
-    spark-warehouse (same location as the existing staged stream
-    inputs): ``_stream_cap/<applicationId>/<name>_<run token>``.  No two
+    """Fresh parquet dir for one stream run — a capture sink or a staged
+    stream input — under the repo's spark-warehouse:
+    ``_stream_cap/<applicationId>/<name>_<run token>``.  No two
     runs share a dir — concurrent runs of one stream, in one
     application or several, never clobber each other's rows — and every
     bench/oracle invocation recomputes the capture from the parquet
@@ -1005,47 +978,32 @@ def stream_capture(
     schema=None,
     partitions: int | None = None,
 ):
-    """Drain an availableNow stream through a PARQUET capture sink and
-    return the captured rows as a batch frame — the JVM-side equivalent
-    of the r1-r10 ``foreachBatch(collect())`` + ``createDataFrame(rows)``
-    capture, same rows, no driver row round-trip.
-
-    Why (r11, guide §5 "the driver should do almost no data work" +
-    VERDICT r10 "What's wrong" item 4): the collect pattern serialized
-    every output row JVM → py4j → driver Python objects, then
-    ``createDataFrame`` pickled them all BACK to the JVM — two full
-    driver-side passes over the stream's output (measured: the stateless
-    stream_validate spent ~4 s of its 5.2 s there at sf0.1), and an
-    unbounded-output stream through it is a driver OOM at 100 TB.  A
-    parquet capture is the production sink shape: per-batch ``append``
-    for append-mode streams, per-batch ``overwrite`` for complete-mode
-    streams (each batch re-emits the FULL state, so the surviving files
-    are exactly the final snapshot — what the old ``rows.clear()`` +
-    extend kept).
+    """:func:`drain` an availableNow stream into a PARQUET capture sink
+    and return the captured rows as a batch frame — no output row
+    crosses to the driver.  Append-mode streams append each batch;
+    complete-mode streams overwrite per batch (each batch re-emits the
+    FULL state, so the surviving files are exactly the final snapshot).
+    Update-mode batches append, so the capture holds every update row.
 
     ``transform`` (optional) maps each micro-batch frame before the
-    write — for the gate-style queries that score every batch with a
-    batch operator; ``schema`` must then be the transformed schema (the
-    read-back is pinned to it, so zero-batch runs still return an empty,
-    correctly-typed frame).  ``partitions`` forwards to
-    :func:`stream_state_scope` (Python-stateful folds size to cores).
-    """
+    write — a gate that scores every batch with a batch operator, or a
+    mergeable fold's per-batch partial that the caller merges in the
+    engine over the captured frame; ``schema`` must then be the
+    transformed schema (the read-back is pinned to it, so zero-batch
+    runs still return an empty, correctly-typed frame).  The transform
+    and write run inside ``cache.scoped()``, so persists a transform
+    tracks are freed before the next batch.  ``partitions`` forwards to
+    :func:`drain`."""
     spark = sdf.sparkSession
     stage = capture_stage(spark, name)
     wmode = "overwrite" if output_mode == "complete" else "append"
 
     def _sink(batch, _i):
-        out = transform(batch) if transform is not None else batch
-        out.write.mode(wmode).parquet(stage)
+        with cache.scoped():
+            out = transform(batch) if transform is not None else batch
+            out.write.mode(wmode).parquet(stage)
 
-    with stream_state_scope(spark, partitions=partitions):
-        q = (
-            sdf.writeStream.foreachBatch(_sink)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, name)
+    drain(sdf, name, _sink, output_mode, partitions)
     return spark.read.schema(schema or sdf.schema).parquet(stage)
 
 

@@ -138,22 +138,16 @@ def q_stream_ann_ivf_append(spark, sf_dir):
     bit-identical to brute force over the whole corpus — streaming
     appends provably lose nothing, the ann_ivf_incremental certificate
     on the streaming engine."""
-    import os
-
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        await_streaming,
-        stream_state_scope,
+        capture_stage,
+        drain,
     )
 
     emb, queries = _corpus_and_queries(spark, sf_dir)
     base = emb.filter(F.col("vec_id") % 10 != 0)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"ivf_index_streamapp_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    # Rebuilt per call: the stream below appends to it, so a reused
-    # artifact would accumulate duplicate increment rows across calls.
+    # A fresh dir per call: the stream below appends to the index, so a
+    # reused artifact would accumulate duplicate increment rows.
+    path = capture_stage(spark, "ivf_index_streamapp")
     similarity.ivf_index_build(base, path, n_cells=16)
 
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
@@ -169,13 +163,7 @@ def q_stream_ann_ivf_append(spark, sf_dir):
         # of double-appending (exactly-once fold; ADVICE r7)
         similarity.ivf_index_append(batch, path, batch_id=i)
 
-    with stream_state_scope(spark):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_ann_ivf_append")
+    drain(stream, "stream_ann_ivf_append", fold)
     return similarity.ivf_index_topk(spark, path, queries, k=K, nprobe=16)
 
 

@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import aggregates as A
-from real_time_data_pipeline_spark.operators.arrowvec import local_frame
 from real_time_data_pipeline_spark.queries.dedup import duck_hexfold_n
 from real_time_data_pipeline_spark.schemas import load_table
 
@@ -138,87 +137,50 @@ def q_stream_kmv_fold(spark, sf_dir):
     """Streaming twin of ``kmv_distinct`` on the SAME sketch contract:
     the event log ARRIVES AS A STREAM (staged as 8 files,
     maxFilesPerTrigger=1 → 8 real micro-batches) and each batch's
-    per-type k-smallest frame (≤ |types|·k rows — the only thing
-    collected) folds into the driver-held sketch by the KMV merge rule
-    (k smallest of the union).  Because merge is lossless for ANY
+    per-type k smallest hashes (≤ |types|·k rows, operators/aggregates
+    .kmv_sketch) go to captured parquet; the finalize is the same KMV
+    step over the union of the captured hashes (k smallest of the
+    union — the KMV merge rule).  Because merge is lossless for ANY
     split of the data (the property ``kmv_merge`` certifies over
-    groups, applied here over TIME slices), the drained state is
+    groups, applied here over TIME slices), the merged sketch is
     hash-identical to the one-shot sketch — the monitoring shape at
-    100 TB: per-batch sketch frames are tiny, history is never
-    re-scanned, state is |types|·k·8 bytes.
+    100 TB: per-batch sketch frames are tiny and history is never
+    re-scanned.
 
     Output: (event_type, n_kept, kth_hash, est_kmv) — the
     sketch-derivable columns (the exact count is precisely what the
     stream never holds)."""
-    import os
-
-    from pyspark.sql import Window
     from real_time_data_pipeline_spark.operators.curation import (
         portable_hash48,
     )
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        await_streaming,
-        stream_state_scope,
+        capture_stage,
+        stream_capture,
     )
 
-    events = load_table(spark, sf_dir, "events").select(
+    stage = capture_stage(spark, "stream_kmv_events")
+    load_table(spark, sf_dir, "events").select(
         "event_type", "user_id"
-    )
-    stage = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        "spark-warehouse",
-        f"stream_kmv_events_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    events.repartition(8).write.mode("overwrite").parquet(stage)
+    ).repartition(8).write.mode("overwrite").parquet(stage)
     schema = spark.read.parquet(stage).schema
 
-    state: dict = {}
-    w = Window.partitionBy("event_type").orderBy("h")
-
-    def fold(batch, _i):
-        sk = (
-            batch.filter(F.col("user_id").isNotNull())
-            .select(
-                "event_type", portable_hash48(F.col("user_id")).alias("h")
-            )
-            .distinct()
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= A.KMV_K)
-            .select("event_type", "h")
-            .collect()  # ≤ |types|·k rows
+    def partials(batch):
+        hashes = batch.filter(F.col("user_id").isNotNull()).select(
+            "event_type", portable_hash48(F.col("user_id")).alias("h")
         )
-        per: dict = {}
-        for r in sk:
-            per.setdefault(r["event_type"], []).append(r["h"])
-        for g, hs in per.items():
-            state[g] = sorted(set(state.get(g, [])) | set(hs))[: A.KMV_K]
+        return A.kmv_sketch(hashes, "event_type").select("event_type", "hashes")
 
-    with stream_state_scope(spark):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_kmv_fold")
-
-    rows = []
-    for g, hs in sorted(state.items()):
-        est = (
-            len(hs)
-            if len(hs) < A.KMV_K
-            else ((A.KMV_K - 1) * A.KMV_SPACE) // hs[-1]
-        )
-        rows.append((g, len(hs), hs[-1], est))
-    return local_frame(
-        spark,
-        rows,
-        "event_type string, n_kept bigint, kth_hash bigint, est_kmv bigint",
+    cap = stream_capture(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage),
+        "stream_kmv_fold",
+        transform=partials,
+        schema="event_type string, hashes array<bigint>",
     )
+    return A.kmv_sketch(
+        cap.select("event_type", F.explode("hashes").alias("h")), "event_type"
+    ).select("event_type", "n_kept", "kth_hash", "est_kmv")
 
 
 QUERIES["stream_kmv_fold"] = q_stream_kmv_fold
@@ -575,120 +537,36 @@ ORACLES["qdigest_merge"] = _qdigest_merge_oracle()
 def q_stream_qdigest_fold(spark, sf_dir):
     """Streaming twin of ``qdigest_quantiles`` on the SAME contract
     (the stream_kmv_fold posture): the event log arrives as 8 real
-    micro-batches; each batch's (cents, count) aggregate — universe-
-    bounded, ≤ 2^16 rows — folds ADDITIVELY into the driver-held
-    histogram, and the digest is built once at drain.  Histogram
-    addition is exact for any batch split (unlike digest-level merge,
-    which is valid-but-not-identical — see the operator docstring), so
-    the drained output is HASH-IDENTICAL to the one-shot sketch and
-    shares its oracle.  State: ≤ 2^16 counters no matter how many rows
-    stream through — the bounded-quantile-monitoring shape at 100 TB."""
-    import os
-
+    micro-batches; each batch's (cents, count) histogram — universe-
+    bounded, ≤ 2^16 rows — goes to captured parquet, one engine merge
+    sums the counts per cents, and the digest is built once from the
+    merged histogram.  Histogram addition is exact for any batch split
+    (unlike digest-level merge, which is valid-but-not-identical — see
+    the operator docstring), so the output is HASH-IDENTICAL to the
+    one-shot sketch and shares its oracle.  Each batch captures ≤ 2^16
+    counters no matter how many rows stream through — the
+    bounded-quantile-monitoring shape at 100 TB."""
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        await_streaming,
-        stream_state_scope,
+        capture_stage,
+        stream_capture,
     )
 
-    events = load_table(spark, sf_dir, "events").select("value")
-    stage = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        "spark-warehouse",
-        f"stream_qdigest_events_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    events.repartition(8).write.mode("overwrite").parquet(stage)
+    stage = capture_stage(spark, "stream_qdigest_events")
+    load_table(spark, sf_dir, "events").select("value").repartition(
+        8
+    ).write.mode("overwrite").parquet(stage)
     schema = spark.read.parquet(stage).schema
 
-    hist: dict = {}
-
-    def fold(batch, _i):
-        rows = (
-            batch.select(
-                F.floor(F.col("value").cast("double") * F.lit(100))
-                .cast("bigint")
-                .alias("cents")
-            )
-            .groupBy("cents")
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-            .collect()  # universe-bounded: <= 2^16 rows per batch
-        )
-        for r in rows:
-            hist[int(r["cents"])] = hist.get(int(r["cents"]), 0) + int(
-                r["cnt"]
-            )
-
-    with stream_state_scope(spark):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_qdigest_fold")
-
-    # drained histogram -> the identical one-shot digest + rank ledger
-    # (built directly from the counters; re-exploding rows to reuse the
-    # operator would re-scan what the stream already aggregated)
-    from real_time_data_pipeline_spark.operators.aggregates import (
-        QD_K,
-        QD_L,
-        _qdigest_build,
+    cap = stream_capture(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage),
+        "stream_qdigest_fold",
+        transform=A.qdigest_histogram,
+        schema="cents bigint, cnt bigint",
     )
-
-    n = sum(hist.values())
-    thr = n // QD_K
-    digest = (
-        _qdigest_build(hist, QD_L, thr)
-        if thr >= 1
-        else {(1 << QD_L) + c: v for c, v in hist.items()}
-    )
-
-    def node_range(idx):
-        lvl = idx.bit_length() - 1
-        span = 1 << (QD_L - lvl)
-        lo = (idx - (1 << lvl)) * span
-        return lo, lo + span - 1
-
-    walk = sorted(
-        ((node_range(i)[1], -node_range(i)[0], c) for i, c in digest.items())
-    )
-    cents_sorted = sorted(hist)
-    cum_before, run = {}, 0
-    for c in cents_sorted:
-        cum_before[c] = run
-        run += hist[c]
-    err_limit = QD_L * thr
-    rows = []
-    for q_bp in (2500, 5000, 7500, 9000, 9900):
-        target = (q_bp * n + 9999) // 10000
-        cum, est = 0, (1 << QD_L) - 1
-        for hi, _nl, c in walk:
-            cum += c
-            if cum >= target:
-                est = hi
-                break
-        lo = 0
-        for c in cents_sorted:
-            if c < est:
-                lo = cum_before[c] + hist[c]
-            else:
-                break
-        r_lo, r_hi = lo + 1, lo + hist.get(est, 0)
-        rank_err = max(0, r_lo - 1 - target, target - r_hi)
-        rows.append(
-            (q_bp, est, target, r_lo, r_hi, rank_err, err_limit,
-             rank_err <= err_limit, len(digest))
-        )
-    return local_frame(
-        spark,
-        rows,
-        "q_bp bigint, est_cents bigint, target_rank bigint, "
-        "rank_lo bigint, rank_hi bigint, rank_err bigint, "
-        "err_limit bigint, within_bound boolean, n_nodes bigint",
+    return A.qdigest_from_histogram(
+        cap.groupBy("cents").agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
 
 

@@ -446,7 +446,6 @@ def q_stream_heavy_hitters(spark, sf_dir):
     (≤ k·partitions rows), history is never re-scanned, and only the
     final recount touches the corpus once."""
     import math
-    import os
 
     from real_time_data_pipeline_spark.operators.aggregates import (
         mg_merge_counts,
@@ -454,16 +453,12 @@ def q_stream_heavy_hitters(spark, sf_dir):
     )
     from real_time_data_pipeline_spark.operators.dedup import tokens_col
     from real_time_data_pipeline_spark.queries.reference_parity import (
-        await_streaming,
-        stream_state_scope,
+        capture_stage,
+        drain,
     )
 
     k = math.ceil(10_000 / HH_THRESHOLD_BP)
-    stage = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"stream_hh_docs_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    stage = capture_stage(spark, "stream_hh_docs")
     _docs(spark, sf_dir).repartition(8).write.mode("overwrite").parquet(stage)
     schema = spark.read.parquet(stage).schema
 
@@ -479,16 +474,13 @@ def q_stream_heavy_hitters(spark, sf_dir):
             k,
         )
 
-    with stream_state_scope(spark):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_streaming(q, "stream_heavy_hitters")
+    drain(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage),
+        "stream_heavy_hitters",
+        fold,
+    )
 
     n_total = state["n_total"]
     cand = local_frame(spark, [(t,) for t in state["counts"]], "item string")

@@ -157,35 +157,6 @@ class TransformChain:
         return _fn
 
 
-def curation_foreach_batch(
-    benchmark: DataFrame,
-    sink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Incremental mode for the LLM-data curation pass: a ``foreachBatch``
-    function running ``operators/curation.curation_flags`` (repetition +
-    benchmark decontamination keep-flags) on each document micro-batch
-    and handing the verdict frame to ``sink(flags_df, batch_id)``.
-
-    Per-micro-batch execution gives EXACTLY the batch semantics because
-    neither signal holds cross-document state: repetition is a
-    doc-bounded histogram and decontamination is a stream-static join
-    against the benchmark gram set (tiny → broadcast; re-derived per
-    batch from the static frame, so benchmark updates between batches
-    are picked up).  Batch/stream flag parity is pinned by test.  Usage:
-
-        docs_stream.writeStream.foreachBatch(
-            curation_foreach_batch(benchmark, sink)).start()
-    """
-    from real_time_data_pipeline_spark.operators.curation import curation_flags
-
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        sink(curation_flags(batch, benchmark, id_col, text_col), batch_id)
-
-    return _fn
-
-
 def start_pipeline(
     raw: DataFrame,
     sink_factories: dict[str, callable],
@@ -198,33 +169,3 @@ def start_pipeline(
     sink A and B; dead_letter/alerts are opt-in)."""
     dag = build_dag(raw, cfg)
     return [make(dag[name]) for name, make in sink_factories.items() if name in dag]
-
-
-def drift_foreach_batch(
-    reference: DataFrame,
-    sink,
-    cat_col: str = "event_type",
-    alert_tv_bp: int = 1500,
-):
-    """Incremental distribution monitoring: a ``foreachBatch`` function
-    running ``operators/quality.categorical_drift`` of each micro-batch
-    against a FROZEN reference window, adding an ``alert`` flag when the
-    TV distance crosses ``alert_tv_bp``.  The drift-alarm side channel
-    of a production ingest: per-batch mix shift vs the trusted snapshot.
-
-    Per-micro-batch execution gives exactly the batch semantics — the
-    reference is static and the drift stat is a pure function of
-    (reference, batch); batch/stream parity is pinned by test.
-    """
-    from real_time_data_pipeline_spark.operators.quality import (
-        categorical_drift,
-    )
-    from pyspark.sql import functions as F
-
-    def _fn(batch: DataFrame, batch_id: int) -> None:
-        drift = categorical_drift(reference, batch, cat_col).withColumn(
-            "alert", F.col("tv_bp") > alert_tv_bp
-        )
-        sink(drift, batch_id)
-
-    return _fn

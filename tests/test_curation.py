@@ -549,15 +549,16 @@ def test_budget_allocation_zero_token_docs_cross_engine(spark, tmp_path):
 
 
 def test_curation_flags_batch_stream_parity(spark, tmp_path):
-    """The foreachBatch curation twin must produce exactly the batch
-    pass's keep-flags, with docs split across micro-batches (no signal
-    may depend on co-batched documents)."""
+    """curation_flags run per micro-batch (a TransformChain foreachBatch)
+    must produce exactly the batch pass's keep-flags, with docs split
+    across micro-batches (no signal may depend on co-batched
+    documents)."""
     import json
     import os
     import time
 
     from real_time_data_pipeline_spark.streaming.pipeline import (
-        curation_foreach_batch,
+        TransformChain,
     )
 
     rows = [
@@ -601,7 +602,11 @@ def test_curation_flags_batch_stream_parity(spark, tmp_path):
         got_rows.extend(flags.collect())
 
     q = (
-        stream.writeStream.foreachBatch(curation_foreach_batch(bench, sink))
+        stream.writeStream.foreachBatch(
+            TransformChain()
+            .add_processor(lambda b: curation.curation_flags(b, bench))
+            .foreach_batch(sink)
+        )
         .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
         .trigger(availableNow=True)
         .start()

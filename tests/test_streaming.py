@@ -676,13 +676,17 @@ def test_upsert_snapshot_sink_merges_and_replays(spark, tmp_path):
 
 
 def test_drift_foreach_batch_matches_batch_semantics(spark, tmp_path):
-    """Streaming drift monitor == batch categorical_drift on the same
-    micro-batch, including the alert flag."""
+    """Streaming drift monitor (categorical_drift against a frozen
+    reference, per micro-batch through a TransformChain) == batch
+    categorical_drift on the same micro-batch, including the alert
+    flag."""
+    from pyspark.sql import functions as F
+
     from real_time_data_pipeline_spark.operators.quality import (
         categorical_drift,
     )
     from real_time_data_pipeline_spark.streaming.pipeline import (
-        drift_foreach_batch,
+        TransformChain,
     )
 
     ref = spark.createDataFrame(
@@ -703,8 +707,13 @@ def test_drift_foreach_batch_matches_batch_semantics(spark, tmp_path):
     stream = (
         spark.readStream.schema("event_type string").parquet(str(src))
     )
+    monitor = TransformChain().add_processor(
+        lambda b: categorical_drift(ref, b, "event_type").withColumn(
+            "alert", F.col("tv_bp") > 1500
+        )
+    )
     q = stream.writeStream.foreachBatch(
-        drift_foreach_batch(ref, sink, alert_tv_bp=1500)
+        monitor.foreach_batch(sink)
     ).trigger(availableNow=True).start()
     q.awaitTermination(120)
 

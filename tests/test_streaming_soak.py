@@ -352,7 +352,9 @@ def test_streaming_soak_two_sink_dag(spark, tmp_path):
     )
     q_flags = (
         docs_stream.writeStream.foreachBatch(
-            pipeline.curation_foreach_batch(bench, flags_sink)
+            pipeline.TransformChain()
+            .add_processor(lambda b: cur_ops.curation_flags(b, bench))
+            .foreach_batch(flags_sink)
         )
         .option("checkpointLocation", str(tmp_path / "chk_flags"))
         .start()
